@@ -173,11 +173,12 @@ object Bench {
     *     shortened to their unique qNN prefix; r21 carried the jobs
     *     map inside this line, which pushed it past the tail budget
     *     and cost it its head ("metric" and part of jobs were cut at
-    *     134 slots).  Now seconds-ONLY, with ADAPTIVE precision: ms
-    *     (3 decimals) while the projected line fits the budget,
-    *     10 ms (2 decimals) beyond — a complete coarser map beats a
-    *     decapitated precise one (r21 verdict #2; BenchTailBudgetSpec
-    *     pins the 150-slot fit);
+    *     134 slots).  Now seconds-ONLY, with ADAPTIVE precision: the
+    *     most decimals (3, then 2, 1, 0) at which the line fits the
+    *     budget — a complete coarser map beats a decapitated precise
+    *     one (r21 verdict #2; BenchTailBudgetSpec pins the 150-slot
+    *     fit).  If even whole seconds overflow, it throws, naming the
+    *     budget, rather than print a map the tail would cut;
     *  1. per-query jobs for slow rows (sec >= 1) on their OWN line,
     *     printed FIRST so a tail cut truncates jobs, never seconds —
     *     sequential-job count is what separates a shared-machine burst
@@ -197,8 +198,10 @@ object Bench {
     val jobsLine = s"""{"metric":"per_query_jobs","jobs":$slowJobs}"""
     def compactAt(decimals: Int): String = {
       val scale = math.pow(10, decimals)
+      def value(sec: Double): String =
+        if (decimals == 0) math.rint(sec).toLong.toString else (math.rint(sec * scale) / scale).toString
       val entries = rows.map { case (k, sec, _) =>
-        "\"" + key(k) + "\":" + (math.rint(sec * scale) / scale)
+        "\"" + key(k) + "\":" + value(sec)
       }.mkString("{", ",", "}")
       s"""{"metric":"per_query","unit":"sec","queries":$entries}"""
     }
@@ -209,7 +212,10 @@ object Bench {
     // prefixes (+8 B each incl. newline) — the compact line must fit
     // WHOLE in what remains
     val budget = 2048 - (totalLine.length + 8) - 90 - 8
-    val ms = compactAt(3)
-    Seq(jobsLine, if (ms.length <= budget) ms else compactAt(2), totalLine)
+    val compact = (3 to 0 by -1).iterator.map(compactAt).find(_.length <= budget)
+      .getOrElse(throw new IllegalStateException(
+        s"per-query seconds line for ${rows.size} slots exceeds its $budget-byte share " +
+          "of the 2048-byte stdout tail even at whole seconds"))
+    Seq(jobsLine, compact, totalLine)
   }
 }

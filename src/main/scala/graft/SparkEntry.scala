@@ -1450,10 +1450,11 @@ object SparkEntry {
       val o = t(s, dir, "orders").df
       val c = t(s, dir, "customer").df
         .select(col("c_custkey").as("o_custkey"), col("c_mktsegment"))
+      // exact decimal sum, rendered as double (the q02 convention)
       operators.Relational.saltedJoin(o, c, Seq("o_custkey"), col("o_orderkey"), salts = 8)
         .groupBy(col("c_mktsegment"))
         .agg(count(lit(1)).as("n_orders"),
-          sum(col("o_totalprice").cast(DecimalType(20, 2))).as("sum_price"))
+          sum(col("o_totalprice").cast(DecimalType(20, 2))).cast(DoubleType).as("sum_price"))
     }),
 
     // Memory-bounded heavy hitters (SpaceSaving per partition, merged
@@ -2222,7 +2223,7 @@ object SparkEntry {
     // partitioning trick and must be invisible in the results
     "q101_salted_join" ->
       """SELECT c_mktsegment, count(*)::BIGINT AS n_orders,
-        |sum(o_totalprice::DECIMAL(20,2)) AS sum_price
+        |CAST(sum(o_totalprice::DECIMAL(20,2)) AS DOUBLE) AS sum_price
         |FROM orders JOIN customer ON o_custkey = c_custkey
         |GROUP BY c_mktsegment""".stripMargin.replace("\n", " "),
 

@@ -47,11 +47,11 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * Readers resolve ONE manifest (latest or a pinned `version`) and
   * read exactly the files it lists — a torn state is unobservable,
   * and old versions stay readable until [[vacuum]] (time travel).
-  * [[compact]] rewrites the CURRENT file set through the byte-sized
-  * coalesce of [[graft.operators.Layout.compactSmallFiles]]'s shape
-  * and publishes a manifest listing only the rewritten files — data
-  * files are never mutated, so concurrent pinned readers are
-  * untouched.
+  * [[compact]] merges the CURRENT file set into ~target-sized files
+  * by copying parquet row groups byte for byte (no decode, no
+  * re-encode) wherever the inputs came from one writer shape, and
+  * publishes a manifest listing only the merged files — data files
+  * are never mutated, so concurrent pinned readers are untouched.
   *
   * Discovery is O(1), not O(versions): publishes refresh a
   * `_latest` pointer, [[currentVersion]] reads it and forward-probes
@@ -221,7 +221,10 @@ object ManifestStore {
   /** The schema the table committed (recorded in the manifest header),
     * None for manifests written before schema tracking. */
   def schemaOf(spark: SparkSession, root: String, version: Option[Long] = None): Option[StructType] =
-    manifestLines(spark, root, version).find(_.startsWith(SchemaHeader))
+    headerSchema(manifestLines(spark, root, version))
+
+  private def headerSchema(lines: Seq[String]): Option[StructType] =
+    lines.find(_.startsWith(SchemaHeader))
       .map(l => DataType.fromJson(l.stripPrefix(SchemaHeader)).asInstanceOf[StructType])
 
   private val SchemaHeader = "#schema\t"
@@ -315,13 +318,12 @@ object ManifestStore {
     * (guide §6); legacy schema-less manifests fall back to inference. */
   def read(spark: SparkSession, root: String, version: Option[Long] = None): DataFrame = {
     val lines = manifestLines(spark, root, version)
-    val fileList = lines.filterNot(_.startsWith("#"))
-    lines.find(_.startsWith(SchemaHeader))
-      .map(l => DataType.fromJson(l.stripPrefix(SchemaHeader)).asInstanceOf[StructType]) match {
-      case Some(schema) => spark.read.schema(schema).parquet(fileList: _*)
-      case None => spark.read.parquet(fileList: _*)
-    }
+    readFiles(spark, lines.filterNot(_.startsWith("#")), headerSchema(lines))
   }
+
+  private def readFiles(spark: SparkSession, paths: Seq[String],
+                        schema: Option[StructType]): DataFrame =
+    schema.fold(spark.read)(spark.read.schema(_)).parquet(paths: _*)
 
   /** Append `df` as a new version (previous files + the new ones).
     * Returns the committed version.  Throws if another committer
@@ -388,19 +390,21 @@ object ManifestStore {
     * [[vacuum]]'s orphan rules see committed data exactly as
     * [[commitAppend]] leaves it), then the manifest is published.  On
     * a lost optimistic-concurrency race the data is NOT deleted and
-    * NOT recomputed: the already-written files are simply re-targeted
-    * at the new next version and publish retries, up to `maxRetries`
-    * races (after which the ConcurrentModificationException surfaces
-    * and the caller may call commitStaged again later — the handle
-    * returned in the exception message names the current dir).
+    * NOT recomputed: the dir is renamed back to its `staged-` name
+    * (a stale `v<N>` name would be fair game for vacuum's orphan
+    * sweep) and publish retries on the new current version, up to
+    * `maxRetries` races.  After that a [[StagedCommitConflict]]
+    * surfaces carrying the handle to commit again later; its dir's
+    * modification time is refreshed, so vacuum's age-gated `staged-`
+    * sweep gives the caller the same grace period as a fresh stage.
     * Returns the committed version. */
   def commitStaged(spark: SparkSession, root: String, staged: Staged,
                    maxRetries: Int = 10): Long = {
     val f = fs(spark, root)
     require(f.makeQualified(new Path(staged.root)) == f.makeQualified(new Path(root)),
       s"staged handle belongs to ${staged.root}, not $root")
-    var dir = new Path(staged.dir)
-    require(f.exists(dir), s"staged dir ${staged.dir} is gone — already committed or vacuumed?")
+    val home = new Path(staged.dir)
+    require(f.exists(home), s"staged dir ${staged.dir} is gone — already committed or vacuumed?")
     var attempt = 0
     var committed = -1L
     while (committed < 0) {
@@ -409,23 +413,33 @@ object ManifestStore {
         .foreach(stored => requireSameSchema(stored, staged.schema, root))
       val next = prev.map(_ + 1).getOrElse(0L)
       val target = versionedDataDir(root, next, staged.label)
-      require(f.rename(dir, target),
-        s"could not move staged data $dir to $target")
-      dir = target
+      require(f.rename(home, target),
+        s"could not move staged data $home to $target")
       try {
         publish(spark, root, next, staged.schema,
           prev.map(v => files(spark, root, Some(v))).getOrElse(Nil) ++
-            listParquet(spark, dir))
+            listParquet(spark, target))
         committed = next
       } catch {
         case e: java.util.ConcurrentModificationException =>
+          require(f.rename(target, home),
+            s"lost the race for v$next and could not move staged data $target back to $home")
           attempt += 1
-          if (attempt > maxRetries) throw new java.util.ConcurrentModificationException(
-            s"${e.getMessage} (staged data preserved at $dir after $maxRetries retries)")
+          if (attempt > maxRetries) {
+            f.setTimes(home, System.currentTimeMillis(), -1)
+            throw new StagedCommitConflict(
+              s"${e.getMessage} (staged data preserved at $home after $maxRetries retries)", staged)
+          }
       }
     }
     committed
   }
+
+  /** [[commitStaged]] lost `maxRetries` optimistic-concurrency races;
+    * `staged` is still uncommitted and may be passed to commitStaged
+    * again. */
+  final class StagedCommitConflict(message: String, val staged: Staged)
+    extends java.util.ConcurrentModificationException(message)
 
   /** Replace the ENTIRE table as a new version: the manifest lists
     * only the new data files; previous files stay readable for pinned
@@ -450,11 +464,19 @@ object ManifestStore {
     next
   }
 
-  /** Rewrite the CURRENT file set into ~targetFileBytes files (the
-    * small-files maintenance pass, manifest edition): shuffle-free
-    * coalesce sized from the manifest's own byte count, then a new
-    * manifest listing ONLY the rewritten files.  Old versions keep
-    * reading the old files until [[vacuum]]. */
+  /** Merge the CURRENT file set into ~targetFileBytes files (the
+    * small-files maintenance pass, manifest edition), then publish a
+    * new manifest listing ONLY the merged files.  Old versions keep
+    * reading the old files until [[vacuum]].
+    *
+    * The files are packed, in manifest order, into bins of at most
+    * `targetFileBytes`, and ONE Spark job merges each bin in its own
+    * task by copying parquet row groups — column chunks, page indexes
+    * and footer key-value metadata byte for byte ([[mergeBin]]).  A
+    * bin whose files do not share one parquet schema and metadata, or
+    * whose row groups are too small to keep ([[MinCopyRowsPerGroup]]),
+    * is instead re-encoded by a coalesced rewrite that reads with the
+    * manifest's recorded schema, so no schema-inference job runs. */
   def compact(spark: SparkSession, root: String,
               targetFileBytes: Long = 128L << 20): Long = {
     require(targetFileBytes >= (1L << 20), s"target below 1 MiB recreates the problem: $targetFileBytes")
@@ -462,16 +484,26 @@ object ManifestStore {
       throw new IllegalStateException(s"nothing to compact under $root"))
     val next = prev + 1
     val f = fs(spark, root)
-    val cur = files(spark, root, Some(prev))
-    val bytes = cur.map(p => f.getFileStatus(new Path(p)).getLen).sum
-    val n = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
+    val lines = manifestLines(spark, root, Some(prev))
+    val schema = headerSchema(lines)
+    val sized = lines.filterNot(_.startsWith("#"))
+      .map(p => p -> f.getFileStatus(new Path(p)).getLen)
     val dataDir = versionedDataDir(root, next, "compact")
-    val rewritten = spark.read.parquet(cur: _*)
-    rewritten.coalesce(n)
-      .write.mode("errorifexists").parquet(dataDir.toString)
-    try publish(spark, root, next,
-      schemaOf(spark, root, Some(prev)).getOrElse(rewritten.schema),
-      listParquet(spark, dataDir))
+    // a schema-less (pre-schema-tracking) manifest has no schema to
+    // publish for a copy: it takes the inferring rewrite whole
+    val bins = packBins(sized, targetFileBytes)
+    val merged = if (schema.isEmpty) bins.map(_ => false) else copyBins(spark, bins, dataDir)
+    val declined = bins.zip(merged).collect { case (bin, false) => bin }.flatten
+    val published = if (declined.isEmpty) schema.get else {
+      val bytes = declined.map(_._2).sum
+      val n = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
+      val rewritten = readFiles(spark, declined.map(_._1), schema)
+      describing(spark, "ManifestStore.compact: rewrite") {
+        rewritten.coalesce(n).write.mode("append").parquet(dataDir.toString)
+      }
+      schema.getOrElse(rewritten.schema)
+    }
+    try publish(spark, root, next, published, listParquet(spark, dataDir))
     catch {
       case e: java.util.ConcurrentModificationException =>
         // same reclaim as commitAppend: a losing compaction's rewrite
@@ -482,6 +514,109 @@ object ManifestStore {
         throw e
     }
     next
+  }
+
+  /** Mean rows per row group below which [[compact]] re-encodes a bin
+    * instead of copying its row groups.  A copied file keeps every
+    * input row group, and each row group has a fixed scan cost; at
+    * this size a merged file's scan stays within 10% of a re-encoded
+    * one (ScaleRehearsal's `rowgroups` mode). */
+  private[graft] val MinCopyRowsPerGroup = 2000L
+
+  /** Greedy, order-preserving packing of (path, bytes) into bins of at
+    * most `target` bytes; a file larger than `target` gets a bin of
+    * its own. */
+  private def packBins(files: Seq[(String, Long)], target: Long): Seq[Seq[(String, Long)]] = {
+    val bins = Seq.newBuilder[Seq[(String, Long)]]
+    var bin = Vector.empty[(String, Long)]
+    var binBytes = 0L
+    files.foreach { case file @ (_, len) =>
+      if (bin.nonEmpty && binBytes + len > target) { bins += bin; bin = Vector.empty; binBytes = 0L }
+      bin :+= file
+      binBytes += len
+    }
+    if (bin.nonEmpty) bins += bin
+    bins.result()
+  }
+
+  /** One job, one task per bin: each task merges its bin into
+    * `dataDir` ([[mergeBin]]) or declines it.  Returns, per bin,
+    * whether it was merged.  Output names carry the task attempt, so a
+    * retried or speculative attempt never collides with another;
+    * files of attempts whose result the driver did not take are
+    * deleted here, so the dir holds exactly the merged bins. */
+  private def copyBins(spark: SparkSession, bins: Seq[Seq[(String, Long)]],
+                       dataDir: Path): Seq[Boolean] = {
+    if (bins.isEmpty) return Nil
+    val conf = new org.apache.spark.SerializableWritable(hadoopConf(spark))
+    val dir = dataDir.toString
+    val outs = describing(spark, "ManifestStore.compact: copy row groups") {
+      spark.sparkContext.parallelize(bins.map(_.map(_._1)).zipWithIndex, bins.size)
+        .map { case (bin, i) =>
+          val attempt = org.apache.spark.TaskContext.get().attemptNumber()
+          mergeBin(conf.value, bin, new Path(dir, f"part-$i%05d-a$attempt-compact.parquet"))
+            .map(_.getName)
+        }.collect().toSeq
+    }
+    val f = fs(spark, dir)
+    val kept = outs.flatten.toSet
+    if (f.exists(dataDir))
+      f.listStatus(dataDir).map(_.getPath)
+        .filter(p => p.getName.endsWith(".parquet") && !kept.contains(p.getName))
+        .foreach(f.delete(_, false))
+    outs.map(_.isDefined)
+  }
+
+  /** Merge `inputs` into `out` by copying their row groups with
+    * parquet's `ParquetRewriter`, when every input has the same
+    * parquet schema and the same footer key-value metadata (ignoring
+    * the rewriter's own `original.created.by`, so a compacted file
+    * merges again) and their row groups average at least
+    * [[MinCopyRowsPerGroup]] rows.  Returns the written path, or None
+    * (nothing written) when a check fails. */
+  private def mergeBin(conf: org.apache.hadoop.conf.Configuration,
+                       inputs: Seq[String], out: Path): Option[Path] = {
+    import org.apache.parquet.hadoop.rewrite.ParquetRewriter
+    import scala.jdk.CollectionConverters._
+    // one options object for every footer: ParquetFileReader.open
+    // without options builds a fresh Configuration per file
+    val options = org.apache.parquet.HadoopReadOptions.builder(conf).build()
+    val footers = inputs.map { p =>
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(p), conf), options)
+      try reader.getFooter finally reader.close()
+    }
+    def keyValues(m: org.apache.parquet.hadoop.metadata.FileMetaData) =
+      m.getKeyValueMetaData.asScala.toMap - ParquetRewriter.ORIGINAL_CREATED_BY_KEY
+    val first = footers.head.getFileMetaData
+    val uniform = footers.forall { ft =>
+      val m = ft.getFileMetaData
+      m.getSchema == first.getSchema && keyValues(m) == keyValues(first)
+    }
+    val blocks = footers.flatMap(_.getBlocks.asScala)
+    if (!uniform || blocks.isEmpty ||
+        blocks.map(_.getRowCount).sum < MinCopyRowsPerGroup * blocks.size) None
+    else { copyRowGroups(conf, inputs, out); Some(out) }
+  }
+
+  /** Concatenates the row groups of `inputs` (one parquet schema) into
+    * `out` without decoding them. */
+  private[graft] def copyRowGroups(conf: org.apache.hadoop.conf.Configuration,
+                                   inputs: Seq[String], out: Path): Unit = {
+    import org.apache.parquet.hadoop.rewrite.{ParquetRewriter, RewriteOptions}
+    import scala.jdk.CollectionConverters._
+    val rewriter = new ParquetRewriter(
+      new RewriteOptions.Builder(conf, inputs.map(new Path(_)).asJava, out).build())
+    try rewriter.processBlocks() finally rewriter.close()
+  }
+
+  /** Runs `body` with its jobs described as `what`, restoring the
+    * caller's description after. */
+  private def describing[T](spark: SparkSession, what: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val saved = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(what)
+    try body finally sc.setJobDescription(saved)
   }
 
   /** Exactly-once streaming sink step: commit one micro-batch,

@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   * Deterministic — no RNG, rerunnable to the same bytes.
   *
   * Usage: runMain graft.tools.ScaleRehearsal <srcSfDir> <outDir> <N>
-  *   [rot|tag|join|ann|sketch|events|cc|sim|media|span|spangen|suite|files|semdedup|semincr|manifest|sink]
+  *   [rot|tag|join|ann|sketch|events|cc|sim|media|span|spangen|suite|files|semdedup|semincr|manifest|sink|rowgroups]
   * (writes the scaled tables under <outDir>; never touches the
   * source).  `cc` = distributed connected components above the driver
   * cutoff; `sim` = PQ/ADC/IVF+PQ (q87/q89/q91); `media` = WAV/BMP/
@@ -67,6 +67,7 @@ object ScaleRehearsal {
     if (mode == "semincr") { semIncrRehearsal(spark, src, out, n); spark.stop(); return }
     if (mode == "manifest") { manifestRehearsal(spark, src, out, n); spark.stop(); return }
     if (mode == "sink") { sinkRehearsal(spark, src, out, n); spark.stop(); return }
+    if (mode == "rowgroups") { rowGroupRehearsal(spark, src, out, n); spark.stop(); return }
     val d = spark.read.parquet(s"$src/documents.parquet")
     // rot i ≡ 0 (mod 26) is the identity rotation — copies would share
     // ALL shingles, silently inverting the documented disjointness
@@ -129,14 +130,18 @@ object ScaleRehearsal {
       else { val r = raw(); val m = man(); (m, r) }
     }.unzip
     require(ManifestStore.read(spark, mRoot).count() == total, "manifest store lost rows")
+    val filesBefore = ManifestStore.files(spark, mRoot).size
     val cWall = time { ManifestStore.compact(spark, mRoot, 32L << 20); () }
-    require(ManifestStore.read(spark, mRoot).count() == total, "compaction lost rows")
+    val compacted = ManifestStore.read(spark, mRoot).count()
+    require(compacted == total, "compaction lost rows")
+    val filesAfter = ManifestStore.files(spark, mRoot).size
     val vWall = time { ManifestStore.vacuum(spark, mRoot, keepVersions = 1); () }
     require(ManifestStore.read(spark, mRoot).count() == total, "vacuum broke the current version")
     println(f"manifest rehearsal over $total%,d rows x $n commits:")
     println(f"  per-commit wall: manifest mean ${mWalls.sum / n}%.3f s vs raw append mean ${rWalls.sum / n}%.3f s " +
       f"(atomicity overhead ${(mWalls.sum - rWalls.sum) / n}%+.3f s/commit)")
-    println(f"  compact ${cWall}%.2f s, vacuum ${vWall}%.2f s, counts identical at every step")
+    println(f"  compact ${cWall}%.2f s ($filesBefore -> $filesAfter files, $compacted%,d rows), " +
+      f"vacuum ${vWall}%.2f s, counts identical at every step")
   }
 
   /** Streaming-sink rehearsal: `n` micro-batches through the
@@ -147,8 +152,8 @@ object ScaleRehearsal {
     * did.  A compact+vacuum and a post-maintenance REPLAY are
     * interleaved mid-stream so the shape includes the maintenance a
     * real table sees (and exercises the durable-ledger no-op after
-    * the batch's own manifest was vacuumed).  Prints first- vs
-    * last-quartile mean per-batch wall. */
+    * the batch's own manifest was vacuumed).  Prints the compaction's
+    * wall and first- vs last-quartile mean per-batch wall. */
   private def sinkRehearsal(spark: SparkSession, src: String, out: String, n: Int): Unit = {
     import graft.sources.ManifestStore
     require(n >= 8 && n <= 512, s"batches in [8, 512], got $n")
@@ -159,12 +164,15 @@ object ScaleRehearsal {
     val root = s"$out/sink_store"
     rm(new java.io.File(root))
     spark.range(10).write.parquet(s"$out/warmup_${System.nanoTime}") // committer warmup
+    var compactWall = 0.0
     val walls = (0 until n).map { b =>
       val t0 = System.nanoTime
       ManifestStore.commitStreamBatch(spark, root, batchDf, b.toLong)
       val w = (System.nanoTime - t0) / 1e9
       if (b == n / 2) {
+        val t1 = System.nanoTime
         ManifestStore.compact(spark, root, 64L << 20)
+        compactWall = (System.nanoTime - t1) / 1e9
         ManifestStore.vacuum(spark, root, keepVersions = 2)
         // replay of an already-committed batch whose own manifest was
         // just vacuumed: the ledger must make it a no-op
@@ -179,8 +187,53 @@ object ScaleRehearsal {
     val first = walls.take(q).sum / q
     val last = walls.takeRight(q).sum / q
     println(f"sink rehearsal: $n micro-batches x $batchRows%,d rows, compact+vacuum+replay at n/2")
+    println(f"  compact at n/2 ${compactWall}%.2f s over ${batchRows * (n / 2 + 1)}%,d rows; " +
+      f"${batchRows * n}%,d rows read back after the last batch")
     println(f"  per-batch wall: first-quartile mean $first%.3f s, last-quartile mean $last%.3f s " +
       f"(flatness ratio ${last / first}%.2f)")
+  }
+
+  /** Row-group scan-cost rehearsal, the measurement behind
+    * [[graft.sources.ManifestStore.MinCopyRowsPerGroup]]: the same
+    * `n` × 40,000 lineitem rows written as single-row-group files of
+    * about k rows, for k from 250 to 8,000, and each set merged into
+    * one file two ways — row groups copied (what compaction's copy
+    * path writes: every k-row group kept) and re-encoded (coalesce(1):
+    * one row group).  The ingest benchmark's read (a count and two
+    * sums over two columns) is timed on both, alternating, min-of-15.
+    * Prints per k the row groups, both reads' walls and their ratio;
+    * the copy threshold is the smallest k whose ratio stays within
+    * 1.10. */
+  private def rowGroupRehearsal(spark: SparkSession, src: String, out: String, n: Int): Unit = {
+    require(n >= 1 && n <= 15, s"n x 40,000 rows of sf0.1 lineitem, n in [1, 15], got $n")
+    val total = n * 40000
+    val rows = spark.read.parquet(s"$src/lineitem.parquet").limit(total).cache()
+    require(rows.count() == total, s"lineitem has fewer than $total rows")
+    val conf = spark.sessionState.newHadoopConf()
+    def read(path: String) = spark.read.parquet(path).agg(count(lit(1)),
+      sum(col("l_quantity")), sum(round(col("l_extendedprice") * 100).cast("long")))
+    def time(path: String): Double = {
+      val t0 = System.nanoTime(); read(path).collect(); (System.nanoTime() - t0) / 1e9
+    }
+    def parquetIn(dir: String): Seq[String] = new java.io.File(dir).listFiles()
+      .filter(_.getName.endsWith(".parquet")).map(_.getAbsolutePath).sorted.toSeq
+    println(f"${"k"}%6s ${"row_groups"}%10s ${"copied_ms"}%10s ${"reencoded_ms"}%12s ${"ratio"}%6s")
+    for (k <- Seq(250, 500, 1000, 1500, 2000, 3000, 4000, 8000)) {
+      val dir = s"$out/rowgroups/k$k"
+      rows.repartition(math.max(1, total / k)).write.mode(SaveMode.Overwrite).parquet(s"$dir/files")
+      val files = parquetIn(s"$dir/files")
+      val copied = s"$dir/copied.parquet"
+      new java.io.File(copied).delete()
+      graft.sources.ManifestStore.copyRowGroups(conf, files, new org.apache.hadoop.fs.Path(copied))
+      spark.read.parquet(files: _*).coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$dir/reencoded")
+      val reencoded = parquetIn(s"$dir/reencoded").head
+      def exact(path: String) = { val r = read(path).collect().head; (r.getLong(0), r.getLong(2)) }
+      require(exact(copied) == exact(reencoded) && exact(copied)._1 == total,
+        s"k=$k: the copied and re-encoded files disagree")
+      (1 to 2).foreach { _ => time(copied); time(reencoded) }
+      val (c, r) = (1 to 15).map(_ => (time(copied), time(reencoded))).unzip
+      println(f"$k%6d ${files.size}%10d ${c.min * 1e3}%10.1f ${r.min * 1e3}%12.1f ${c.min / r.min}%6.2f")
+    }
   }
 
   /** File-count rehearsal (the small-files tax, measured): the SAME

@@ -43,6 +43,22 @@ class BenchTailBudgetSpec extends AnyFunSuite {
     assert(compact.contains("0.988"), "ms (3-decimal) precision expected at 134 slots")
   }
 
+  test("precision steps down 2 -> 1 -> 0 decimals as slots grow, then fails naming the budget") {
+    // 3-digit keys and two-digit seconds: each extra decimal costs one
+    // byte per slot, so these counts overflow 2 (145 slots) and 1 (170)
+    // decimals while the next coarser step still fits
+    def rows(n: Int) = (100 until 100 + n).map(i => (s"q${i}_slot", 12.345, 3))
+    def fits(compactLen: Int, total: String) = compactLen + total.length + 8 * 2 + 90 <= 2048
+    val Seq(_, oneDec, total1) = Bench.tailLines(rows(145), 0, "/data/sf0.1")
+    assert(oneDec.contains("\"q100\":12.3,") && fits(oneDec.length, total1))
+    assert(!fits(oneDec.length + 145, total1), "premise: 2 decimals (+1 byte a slot) overflow")
+    val Seq(_, whole, total0) = Bench.tailLines(rows(170), 0, "/data/sf0.1")
+    assert(whole.contains("\"q100\":12,") && whole.contains("\"q269\":12}") && fits(whole.length, total0))
+    assert(!fits(whole.length + 2 * 170, total0), "premise: 1 decimal (+2 bytes a slot) overflows")
+    val e = intercept[IllegalStateException](Bench.tailLines(rows(250), 0, "/data/sf0.1"))
+    assert(e.getMessage.contains("2048-byte stdout tail") && e.getMessage.contains("250 slots"), e.getMessage)
+  }
+
   test("jobs line carries only >= 1 s rows; failed (-1) rows never inflate the total") {
     val rows = Seq(("q1_a", 0.5, 2), ("q2_b", 2.0, 9), ("q3_c", -1.0, 0))
     val Seq(jobs, compact, total) = Bench.tailLines(rows, 1, "/x")

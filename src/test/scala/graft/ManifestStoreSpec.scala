@@ -17,6 +17,95 @@ class ManifestStoreSpec extends SparkSpec {
     }
   }
 
+  /** Descriptions of the jobs `body` runs ("" for an undescribed job). */
+  private def jobsDuring(body: => Unit): Seq[String] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        seen.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse("")); ()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      // the listener bus is async: poll until the count holds still
+      var last = -1
+      var spins = 0
+      while (spins < 100 && last != seen.size) { last = seen.size; Thread.sleep(30); spins += 1 }
+    } finally spark.sparkContext.removeSparkListener(listener)
+    seen.toArray(Array.empty[String]).toSeq
+  }
+
+  private def rowGroups(path: String): Int = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(path), conf))
+    try reader.getFooter.getBlocks.size finally reader.close()
+  }
+
+  /** One single-file append of rows [lo, hi) with decimal, timestamp and
+    * string columns beside the id. */
+  private def typedBatch(lo: Long, hi: Long) =
+    spark.range(lo, hi).select(col("id"),
+      (col("id") % 1000 / 4).cast("decimal(12,2)").as("price"),
+      timestamp_seconds(col("id") * 3607).as("ts"),
+      concat(lit("k"), (col("id") % 13).cast("string")).as("tag")).repartition(1)
+
+  private val CopyJob = "ManifestStore.compact: copy row groups"
+  private val RewriteJob = "ManifestStore.compact: rewrite"
+
+  test("compact copies row groups of one writer shape: rows, schema and footers survive, twice over") {
+    withRoot { root =>
+      val rows = ManifestStore.MinCopyRowsPerGroup * 3
+      for (b <- 0 until 3) ManifestStore.commitAppend(spark, root, typedBatch(b * rows, (b + 1) * rows), s"b$b")
+      val inputs = ManifestStore.files(spark, root)
+      val want = ManifestStore.read(spark, root).orderBy("id").collect().toSeq
+      val storeSchema = ManifestStore.read(spark, root).schema
+      val fileSchema = spark.read.parquet(inputs: _*).schema
+      assert(fileSchema.map(_.dataType).toSet.exists(_.isInstanceOf[org.apache.spark.sql.types.DecimalType]))
+      val jobs = jobsDuring(ManifestStore.compact(spark, root))
+      assert(jobs == Seq(CopyJob), s"the copy path runs one job and no other: $jobs")
+      val merged = ManifestStore.files(spark, root)
+      assert(merged.size == 1 && merged.head.contains("v3-compact"))
+      // a re-encode would write one row group; a copy keeps every input's
+      assert(rowGroups(merged.head) == inputs.map(rowGroups).sum)
+      for ((df, what) <- Seq(ManifestStore.read(spark, root) -> "ManifestStore.read",
+                             spark.read.parquet(merged: _*) -> "inferred read")) {
+        assert(df.schema == (if (what == "inferred read") fileSchema else storeSchema), what)
+        assert(df.orderBy("id").collect().toSeq == want, what)
+      }
+      // a compacted file merges again: the rewriter's own
+      // original.created.by key does not push it to the re-encode
+      ManifestStore.commitAppend(spark, root, typedBatch(3 * rows, 4 * rows), "b3")
+      val again = ManifestStore.files(spark, root)
+      assert(jobsDuring(ManifestStore.compact(spark, root)) == Seq(CopyJob))
+      val twice = ManifestStore.files(spark, root)
+      assert(twice.size == 1 && rowGroups(twice.head) == again.map(rowGroups).sum)
+      assert(spark.read.parquet(twice: _*).schema == fileSchema)
+      assert(ManifestStore.read(spark, root).count() == 4 * rows)
+    }
+  }
+
+  test("compact re-encodes, without an inference job, bins of mixed column order or small row groups") {
+    val rows = ManifestStore.MinCopyRowsPerGroup
+    val cases = Seq(
+      // the append gate accepts a reordered batch; the parquet schemas differ
+      "column order" -> Seq(typedBatch(0, rows), typedBatch(rows, 2 * rows).select("tag", "ts", "price", "id")),
+      "small row groups" -> Seq(typedBatch(0, rows / 4), typedBatch(rows / 4, rows / 2)))
+    for ((what, batches) <- cases) withRoot { root =>
+      batches.zipWithIndex.foreach { case (df, i) => ManifestStore.commitAppend(spark, root, df, s"b$i") }
+      val want = ManifestStore.read(spark, root).orderBy("id").collect().toSeq
+      val schema = ManifestStore.read(spark, root).schema
+      val jobs = jobsDuring(ManifestStore.compact(spark, root))
+      assert(jobs == Seq(CopyJob, RewriteJob), s"$what: declined copy, then the rewrite alone: $jobs")
+      val merged = ManifestStore.files(spark, root)
+      assert(merged.map(rowGroups).sum == 1, what)
+      assert(ManifestStore.read(spark, root).schema == schema, what)
+      assert(ManifestStore.read(spark, root).orderBy("id").collect().toSeq == want, what)
+    }
+  }
+
   test("append commits version, reads see exactly the committed snapshot") {
     withRoot { root =>
       assert(ManifestStore.currentVersion(spark, root).isEmpty)
@@ -80,6 +169,48 @@ class ManifestStoreSpec extends SparkSpec {
       val v = ManifestStore.commitStaged(spark, root, st)
       assert(v == 2L)
       assert(ManifestStore.read(spark, root).as[Long].collect().sorted.toSeq == Seq(1L, 2L, 7L))
+    }
+  }
+
+  test("commitStaged that exhausts its retries leaves a handle vacuum spares, and it commits later") {
+    withRoot { root =>
+      ManifestStore.commitAppend(spark, root, Seq(1L).toDF("x"), "day0")
+      val schema = ManifestStore.schemaOf(spark, root).get
+      // a rival publisher republishes the current file list as fast as
+      // it can, so a commitStaged with no retries loses its race for
+      // the next version; the loop stops once one commitStaged lost
+      val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+      val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+      val rival = new Thread(() => {
+        try while (!stop.get()) {
+          val cur = ManifestStore.currentVersion(spark, root).get
+          try ManifestStore.publish(spark, root, cur + 1, schema, ManifestStore.files(spark, root, Some(cur)))
+          catch { case _: java.util.ConcurrentModificationException => () }
+        } catch { case t: Throwable => failure.set(t) }
+      })
+      var conflict: Option[ManifestStore.StagedCommitConflict] = None
+      var won = Seq.empty[Long]
+      rival.start()
+      try {
+        var round = 0
+        while (conflict.isEmpty && round < 50) {
+          val st = ManifestStore.stageAppend(spark, root, Seq(100L + round).toDF("x"), "late")
+          try { ManifestStore.commitStaged(spark, root, st, maxRetries = 0); won :+= 100L + round }
+          catch { case e: ManifestStore.StagedCommitConflict => conflict = Some(e) }
+          round += 1
+        }
+      } finally { stop.set(true); rival.join() }
+      assert(failure.get() == null, s"the rival publisher failed: ${failure.get()}")
+      assert(conflict.nonEmpty, "the rival never won a race in 50 rounds")
+      val handle = conflict.get.staged
+      assert(new java.io.File(handle.dir).getName.startsWith("staged-late-"))
+      // the orphan sweep deletes unreferenced v<N> dirs below the
+      // retained version; a lost handle must not carry such a name
+      ManifestStore.vacuum(spark, root, keepVersions = 1)
+      assert(new java.io.File(handle.dir).exists, "vacuum must spare a handle that just lost its race")
+      ManifestStore.commitStaged(spark, root, handle)
+      val lost = 100L + won.size
+      assert(ManifestStore.read(spark, root).as[Long].collect().sorted.toSeq == (1L +: won :+ lost).sorted)
     }
   }
 
