@@ -4,10 +4,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
 import java.util.concurrent.atomic.AtomicInteger
 
 /** Driver-run benchmark: every SparkEntry query against
-  * SPARK_GRAFT_SF_DIR, one JSON line out.  Session is tuned for the
-  * local[32] harness (shuffle.partitions = cores, AQE on) and warmed
-  * with a trivial action so the first query doesn't absorb JVM/session
-  * startup.
+  * SPARK_GRAFT_SF_DIR, one JSON line out, in the [[BenchSession]]
+  * session (shuffle.partitions = cores, AQE on, warmed).
   *
   * A failing query is RECORDED (negative time + an "errors" map entry)
   * and fails the run with a nonzero exit — a crash must never read as
@@ -36,18 +34,8 @@ import java.util.concurrent.atomic.AtomicInteger
   */
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = BenchSession.sfDir
+    val spark = BenchSession.create()
     // job/stage tally: every cross-round perf dispute so far reduced to
     // "how many sequential jobs did this query run" (sequential job
     // count is what a loaded driver machine amplifies) — record it per
@@ -81,22 +69,12 @@ object Bench {
         spins += 1
       }
     }
-    spark.range(1000).selectExpr("sum(id)").collect() // warm up session
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => args.isEmpty || args.exists(name.contains) }
+    val selected = BenchSession.select(args.toSeq)
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    // drop everything the previous query left in the block manager:
-    // Dataset caches AND directly-persisted RDDs (operators checkpoint
-    // / persist internally; anything still registered is leaked state
-    // that would pressure the next query's execution memory)
-    def cleanBlocks(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-    }
     // (sec, jobs, stages) for one execution; job/stage deltas bracket
     // the run with a listener-bus drain on each side
     def runOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Int, Int) = {
-      cleanBlocks()
+      BenchSession.cleanBlocks(spark)
       drainListeners()
       val (j0, s0) = (jobCount.get, stageCount.get)
       val t0 = System.nanoTime()

@@ -114,35 +114,9 @@ object SparkEntry {
     iso
   }
 
-  /** events.parquet schema memo, same (path, mtime, len) keying as
-    * EzFrame.readParquet's (r22): the isolated session re-inferred the
-    * schema per QUERY across the ~10 events slots.  Keyed on the file
-    * stat so a regenerated corpus re-infers; the nanosAsLong flag is
-    * constant (eventsSession always sets it), so one memo suffices. */
-  private val eventsSchemaMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, Long), StructType]()
-
-  private[graft] def eventsRaw(s: SparkSession, dir: String): DataFrame = {
-    val iso = eventsSession(s)
-    val path = s"$dir/events.parquet"
-    val stat = try {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val st = fs.getFileStatus(p)
-      Some((fs.makeQualified(p).toString, st.getModificationTime, st.getLen))
-    } catch { case scala.util.control.NonFatal(_) => None }
-    stat match {
-      case Some(key) =>
-        val cached = eventsSchemaMemo.get(key)
-        if (cached != null) iso.read.schema(cached).parquet(path)
-        else {
-          val fresh = iso.read.parquet(path)
-          eventsSchemaMemo.put(key, fresh.schema)
-          fresh
-        }
-      case None => iso.read.parquet(path)
-    }
-  }
+  /** events.parquet through the isolated session (its own memo key). */
+  private[graft] def eventsRaw(s: SparkSession, dir: String): DataFrame =
+    sources.ParquetSchemaMemo.read(eventsSession(s), s"$dir/events.parquet")
 
   private[graft] def events(s: SparkSession, dir: String): DataFrame =
     normalizeEventsTs(eventsRaw(s, dir))
@@ -1704,24 +1678,13 @@ object SparkEntry {
       // milliseconds).  Wall ≈ max of the three scans, not their sum;
       // same three write jobs, same committed rows (the batch tag is
       // an explicit literal, so commit order is invisible to the
-      // merge).  Job descriptions/groups are thread-local, so each
-      // staged write labels itself correctly.
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-      try {
-        val staged = (0 until 3).map { b =>
-          pool.submit(new java.util.concurrent.Callable[sources.ManifestStore.Staged] {
-            def call(): sources.ManifestStore.Staged =
-              sources.ManifestStore.stageAppend(s,
-                root,
-                operators.Dedup.spanEvidenceBatch(
-                    d.filter(pmod(col("doc_id"), lit(3)) === b),
-                    col("text"), col("doc_id"), width = 60)
-                  .withColumn("batch", lit(b)),
-                label = s"batch$b")
-          })
-        }
-        staged.foreach(fut => sources.ManifestStore.commitStaged(s, root, fut.get()))
-      } finally pool.shutdown()
+      // merge).
+      sources.ManifestStore.stageAndCommit(s, root, (0 until 3).map { b =>
+        s"batch$b" -> (() => operators.Dedup.spanEvidenceBatch(
+            d.filter(pmod(col("doc_id"), lit(3)) === b),
+            col("text"), col("doc_id"), width = 60)
+          .withColumn("batch", lit(b)))
+      })
       operators.Dedup.mergeSpanEvidence(
         sources.ManifestStore.read(s, root), minDocs = 2)
     }),
@@ -3515,11 +3478,15 @@ object SparkEntry {
     // the weighted-average form ((hi-pos)*vlo + (pos-flo)*vhi), NOT
     // quantile_cont's lo + frac*(hi-lo): they differ in the last ulp,
     // and a threshold over integer n_chars flips row membership on it
+    // quantile positions in DOUBLE, as Quantiles.exact (Spark's
+    // Percentile) computes them: DuckDB types [0.1, 0.9] as DECIMAL(2,1),
+    // and the exact-decimal pos interpolates two equal neighbours one ulp
+    // high (89.00000000000001), dropping every row AT the threshold
     "q78_quantile_gate" ->
       """WITH ordv AS (SELECT CAST(n_chars AS DOUBLE) AS v,
         |row_number() OVER (ORDER BY n_chars) - 1 AS rk FROM documents),
         |cnt AS (SELECT count(*) AS n FROM documents),
-        |pp AS (SELECT unnest([0.1, 0.9]) AS p, unnest([0.1, 0.9]) * (n - 1) AS pos FROM cnt),
+        |pp AS (SELECT unnest([0.1, 0.9]::DOUBLE[]) AS p, unnest([0.1, 0.9]::DOUBLE[]) * (n - 1) AS pos FROM cnt),
         |th AS (SELECT p, CASE WHEN flo = chi THEN vlo
         |ELSE (chi - pos) * vlo + (pos - flo) * vhi END AS t
         |FROM (SELECT p, pos, floor(pos)::BIGINT AS flo, ceil(pos)::BIGINT AS chi,

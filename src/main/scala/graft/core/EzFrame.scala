@@ -523,46 +523,12 @@ object EzFrame {
   private val HeaderMetaKey = "ez_header"
   private val AliasMetaKey = "ez_aliases"
 
-  /** Parquet schema memo: every bare `spark.read.parquet(path)` pays a
-    * driver-side footer read for schema inference (plus merging when
-    * the path has several files) — ~50–150 ms of single-threaded
-    * driver work.  A suite that constructs hundreds of queries over a
-    * handful of corpus tables repays that per QUERY; at production
-    * scale a catalog would hold the schema.  METADATA cache only (the
-    * StructType, never rows); keyed on (qualified path, mtime, byte
-    * length) so a rewritten file re-infers.  StructField metadata
-    * (units, ez_header, …) rides inside the memoized StructType
-    * unchanged, and the user-specified-schema read path preserves
-    * it. */
-  private val schemaMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, Long), org.apache.spark.sql.types.StructType]()
-
   /** Read Parquet, recovering units/descriptions from StructField
     * metadata and header/aliases from their stashed blocks
-    * (see [[EzFrame.writeParquet]]). */
+    * (see [[EzFrame.writeParquet]]).  The inferred schema is memoized
+    * ([[graft.sources.ParquetSchemaMemo]]). */
   def readParquet(spark: SparkSession, path: String): EzFrame = {
-    val df = {
-      val stat = try {
-        val p = new org.apache.hadoop.fs.Path(path)
-        // sparkContext conf, NOT sessionState.newHadoopConf(): the
-        // latter clones the whole Spark conf per call (~tens of ms —
-        // the exact cost this memo exists to avoid paying per query)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val s = fs.getFileStatus(p)
-        Some((fs.makeQualified(p).toString, s.getModificationTime, s.getLen))
-      } catch { case scala.util.control.NonFatal(_) => None }
-      stat match {
-        case Some(key) =>
-          val cached = schemaMemo.get(key)
-          if (cached != null) spark.read.schema(cached).parquet(path)
-          else {
-            val fresh = spark.read.parquet(path)
-            schemaMemo.put(key, fresh.schema)
-            fresh
-          }
-        case None => spark.read.parquet(path) // unsizable path: no memo
-      }
-    }
+    val df = graft.sources.ParquetSchemaMemo.read(spark, path)
     var meta = EzMeta()
     df.schema.fields.foreach { f =>
       if (f.metadata.contains("unit"))

@@ -435,6 +435,48 @@ object ManifestStore {
     committed
   }
 
+  /** Stage `batches` (label → frame builder) CONCURRENTLY, one thread
+    * each (builders run there too, so their eager jobs overlap), then
+    * publish them with [[commitStaged]] in order; returns the versions.
+    * Wall ≈ the slowest stage, not the sum.
+    *
+    * If a batch fails, nothing is published and its own exception is
+    * rethrown, not the pool's ExecutionException.  The call's jobs share
+    * one job tag; the siblings' jobs are cancelled by it, re-cancelled
+    * until every thread unwinds (a sibling between two jobs starts the
+    * next after a cancel), and only then does the call return.  Threads
+    * are not interrupted while they wait on a job — the scheduler does
+    * not cancel on interrupt, so that would orphan the job — except by
+    * `shutdownNow` after a minute.  Staged dirs stay under
+    * `staged-` for vacuum's age-gated sweep. */
+  def stageAndCommit(spark: SparkSession, root: String,
+                     batches: Seq[(String, () => DataFrame)]): Seq[Long] = {
+    import java.util.concurrent.{ExecutionException, ExecutorCompletionService, Executors, TimeUnit}
+    val sc = spark.sparkContext
+    val tag = s"graft-stage-${java.util.UUID.randomUUID()}"
+    val pool = Executors.newFixedThreadPool(batches.size)
+    val done = new ExecutorCompletionService[Staged](pool)
+    val futures = batches.map { case (label, frame) =>
+      done.submit { () => sc.addJobTag(tag); stageAppend(spark, root, frame(), label) }
+    }
+    try batches.foreach { _ =>
+      try done.take().get() catch { case e: ExecutionException => throw e.getCause }
+    } catch {
+      case failure: Throwable =>
+        sc.cancelJobsWithTag(tag)
+        pool.shutdown()
+        val deadline = System.nanoTime() + StageCancelWaitMs * 1000000L
+        while (!pool.awaitTermination(50, TimeUnit.MILLISECONDS) && System.nanoTime() < deadline)
+          sc.cancelJobsWithTag(tag)
+        pool.shutdownNow() // a no-op once the pool has drained
+        throw failure
+    } finally pool.shutdown()
+    futures.map(f => commitStaged(spark, root, f.get()))
+  }
+
+  // how long a failed stageAndCommit waits for its cancelled siblings
+  private val StageCancelWaitMs = 60000L
+
   /** [[commitStaged]] lost `maxRetries` optimistic-concurrency races;
     * `staged` is still uncommitted and may be passed to commitStaged
     * again. */

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Within-JVM A/B isolation probe (r21 verdict #3: "re-measure the
   * q112/q121 fan-outs in isolation; revert if flat or worse").  Runs
   * ONE query many times, alternating a conf value between rounds
@@ -20,24 +18,12 @@ object ABProbe {
     require(args.length >= 4, "args: <querySubstr> <confKey> <valA> <valB> [rounds]")
     val Array(qsub, key, valA, valB) = args.take(4)
     val rounds = if (args.length > 4) args(4).toInt else 8
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000).selectExpr("sum(id)").collect()
-    val (name, fn) = graft.SparkEntry.queries.toSeq.sortBy(_._1)
-      .find(_._1.contains(qsub)).getOrElse(sys.error(s"no query matches '$qsub'"))
+    val sfDir = graft.BenchSession.sfDir
+    val spark = graft.BenchSession.create()
+    val (name, fn) = graft.BenchSession.select(Seq(qsub)).headOption
+      .getOrElse(sys.error(s"no query matches '$qsub'"))
     def once(v: String): Double = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      graft.BenchSession.cleanBlocks(spark)
       spark.conf.set(key, v)
       val t0 = System.nanoTime()
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()

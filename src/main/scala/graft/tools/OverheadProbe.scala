@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
@@ -15,40 +14,27 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
   *   - exec:   the noop-sink write — actual jobs, AQE re-planning,
   *             task scheduling.
   *
-  * Same session config as Bench (shuffle.partitions = cpus, AQE on)
-  * plus optional overrides from $SPARK_GRAFT_CONF
+  * Same session as Bench ([[graft.BenchSession]]) plus optional
+  * overrides from $SPARK_GRAFT_CONF
   * ("k=v;k=v" — session-settable confs only) so coalescing/
   * parallelism hypotheses can be A/B'd without touching Bench.
   * One pass, no min-of-2: this is a breakdown probe, not a record.
   */
 object OverheadProbe {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val spark = b.getOrCreate()
+    val sfDir = graft.BenchSession.sfDir
+    val spark = graft.BenchSession.create()
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.contains("=")).foreach { kv =>
       val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v)
     })
-    spark.sparkContext.setLogLevel("WARN")
     val jobCount = new AtomicInteger(0)
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = { jobCount.incrementAndGet(); () }
     })
-    spark.range(1000).selectExpr("sum(id)").collect()
-    val selected = graft.SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => args.isEmpty || args.exists(name.contains) }
+    val selected = graft.BenchSession.select(args.toSeq)
     var tb = 0.0; var tp = 0.0; var te = 0.0
     selected.foreach { case (name, fn) =>
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      graft.BenchSession.cleanBlocks(spark)
       val t0 = System.nanoTime()
       val df = fn(spark, sfDir)
       val t1 = System.nanoTime()

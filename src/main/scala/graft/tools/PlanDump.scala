@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import java.nio.charset.StandardCharsets
 
@@ -10,9 +9,9 @@ import java.nio.charset.StandardCharsets
   *
   * Usage: runMain graft.tools.PlanDump <outDir> <suffix> [namePart...]
   * e.g.   runMain graft.tools.PlanDump plans/r21 before q79 q88
-  * No args after suffix = every query.  Session config mirrors
-  * graft.Bench (same shuffle partitions, AQE) so the captured plan is
-  * the one the bench runs.  NOTE: building a side-effecting slot's
+  * No args after suffix = every query.  Runs in Bench's session
+  * ([[graft.BenchSession]]), so the captured plan is the one the bench
+  * runs.  NOTE: building a side-effecting slot's
   * DataFrame (streaming sinks, manifest commits) performs its setup
   * work; the dumped plan is the returned frame's.
   */
@@ -23,20 +22,9 @@ object PlanDump {
     val suffix = args(1)
     val parts = args.drop(2)
     Files.createDirectories(outDir)
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val sel = graft.SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => parts.isEmpty || parts.exists(n.contains) }
+    val sfDir = graft.BenchSession.sfDir
+    val spark = graft.BenchSession.create()
+    val sel = graft.BenchSession.select(parts.toSeq)
     sel.foreach { case (name, fn) =>
       try {
         val df = fn(spark, sfDir)

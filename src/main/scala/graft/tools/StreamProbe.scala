@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Micro-batch cost breakdown for the streaming slots (q59, q121):
@@ -8,25 +7,15 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * map (triggerExecution, queryPlanning, getBatch, addBatch,
   * walCommit, commitOffsets) plus state-operator commit times, so the
   * "~4 s micro-batch floor" (r21 verdict #4) is decomposed into the
-  * machinery pieces that make it up.  Same session config as Bench;
+  * machinery pieces that make it up.  Same session as Bench;
   * optional $SPARK_GRAFT_CONF overrides for A/B runs. */
 object StreamProbe {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val sfDir = graft.BenchSession.sfDir
+    val spark = graft.BenchSession.create()
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.contains("=")).foreach { kv =>
       val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v)
     })
-    spark.sparkContext.setLogLevel("WARN")
     spark.streams.addListener(new StreamingQueryListener {
       override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
         println(s"STREAM START ${e.name} at ${System.nanoTime() / 1e9}")
@@ -44,10 +33,7 @@ object StreamProbe {
       override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
         println(s"STREAM END at ${System.nanoTime() / 1e9}")
     })
-    spark.range(1000).selectExpr("sum(id)").collect()
-    val wanted = if (args.isEmpty) Seq("q59") else args.toSeq
-    graft.SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => wanted.exists(n.contains) }
+    graft.BenchSession.select(if (args.isEmpty) Seq("q59") else args.toSeq)
       .foreach { case (name, fn) =>
         val t0 = System.nanoTime()
         val df = fn(spark, sfDir)
