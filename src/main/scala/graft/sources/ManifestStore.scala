@@ -31,18 +31,17 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *  1. write the new data files under `data/v<next>-<label>/`
   *     (invisible: no manifest references them yet);
   *  2. write the FULL new file list to `_manifests/.tmp-<next>-<uuid>`;
-  *  3. `rename` it to `_manifests/v<next>.json` — atomic on POSIX
-  *     and HDFS, and rename-refuses-to-overwrite gives optimistic
-  *     concurrency: two racing committers of version N cannot both
-  *     win (the loser throws; retry on the new current version).
-  *     NOT atomic on bare S3 — front it with a locking catalog there,
-  *     the same caveat every manifest design carries.  On the LOCAL
-  *     filesystem FileContext's no-overwrite rename is an exists
-  *     check followed by rename(2) — a TOCTOU window for two truly
-  *     concurrent committers; a per-root JVM lock serializes
-  *     same-process publishes (the realistic local case: tests and
-  *     local-mode drivers), and cross-PROCESS local races remain the
-  *     documented local-fs caveat.
+  *  3. put it to `_manifests/v<next>.json` if absent — an `exists`
+  *     check, then `FileSystem.rename`, both under a per-root JVM
+  *     lock: two racing committers of version N cannot both win (the
+  *     loser throws; retry on the new current version).  The lock
+  *     serializes same-process publishes (tests, local-mode drivers);
+  *     HDFS's rename also refuses an existing target.  The local
+  *     fs's rename(2) replaces one, so cross-PROCESS local races stay
+  *     a documented caveat, and bare S3 needs a locking catalog, like
+  *     every manifest design.  Written through the raw, checksum-free
+  *     fs, a publish starts no `readlink` and only its two file
+  *     creations' `chmod`s on a local fs without native IO.
   *
   * Readers resolve ONE manifest (latest or a pinned `version`) and
   * read exactly the files it lists — a torn state is unobservable,
@@ -163,7 +162,8 @@ object ManifestStore {
   // perfectly good pointer into intermittent ChecksumExceptions.
   // Hints are self-validating (a parseable long / tsv, with a correct
   // fallback path behind them), so raw bytes + POSIX rename is the
-  // honest tier for them.
+  // honest tier for them.  Manifests are written raw too: a .crc
+  // sidecar is one more file creation per publish.
   private def rawFs(f: FileSystem): FileSystem = f match {
     case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
     case other => other
@@ -222,6 +222,15 @@ object ManifestStore {
     * None for manifests written before schema tracking. */
   def schemaOf(spark: SparkSession, root: String, version: Option[Long] = None): Option[StructType] =
     headerSchema(manifestLines(spark, root, version))
+
+  /** The schema and file list `version` committed, from one manifest
+    * read; (None, Nil) for no version (an empty root). */
+  private def snapshot(spark: SparkSession, root: String,
+                       version: Option[Long]): (Option[StructType], Seq[String]) =
+    version.fold((Option.empty[StructType], Seq.empty[String])) { v =>
+      val lines = manifestLines(spark, root, Some(v))
+      (headerSchema(lines), lines.filterNot(_.startsWith("#")))
+    }
 
   private def headerSchema(lines: Seq[String]): Option[StructType] =
     lines.find(_.startsWith(SchemaHeader))
@@ -333,15 +342,13 @@ object ManifestStore {
                    label: String = "append"): Long = {
     require(label.matches("[A-Za-z0-9_-]+"), s"label must be path-safe, got '$label'")
     val prev = currentVersion(spark, root)
+    val (stored, prevFiles) = snapshot(spark, root, prev)
     // schema gate BEFORE the data write: fail without spending the job
-    prev.flatMap(v => schemaOf(spark, root, Some(v)))
-      .foreach(stored => requireSameSchema(stored, df.schema, root))
+    stored.foreach(requireSameSchema(_, df.schema, root))
     val next = prev.map(_ + 1).getOrElse(0L)
     val dataDir = versionedDataDir(root, next, label)
-    df.write.mode("errorifexists").parquet(dataDir.toString)
-    val newFiles = listParquet(spark, dataDir)
-    try publish(spark, root, next, df.schema,
-      prev.map(v => files(spark, root, Some(v))).getOrElse(Nil) ++ newFiles)
+    writeData(df, dataDir)
+    try publish(spark, root, next, df.schema, prevFiles ++ listParquet(spark, dataDir))
     catch {
       case e: java.util.ConcurrentModificationException =>
         // the loser's data files are referenced by nothing and never
@@ -376,13 +383,20 @@ object ManifestStore {
   def stageAppend(spark: SparkSession, root: String, df: DataFrame,
                   label: String = "append"): Staged = {
     require(label.matches("[A-Za-z0-9_-]+"), s"label must be path-safe, got '$label'")
-    currentVersion(spark, root).flatMap(v => schemaOf(spark, root, Some(v)))
-      .foreach(stored => requireSameSchema(stored, df.schema, root))
+    val (stored, _) = snapshot(spark, root, currentVersion(spark, root))
+    stored.foreach(requireSameSchema(_, df.schema, root))
     val dir = new Path(new Path(root, "data"),
       s"staged-$label-${java.util.UUID.randomUUID().toString.take(8)}")
-    df.write.mode("errorifexists").parquet(dir.toString)
+    writeData(df, dir)
     Staged(root, dir.toString, df.schema, label)
   }
+
+  /** Writes `df` as parquet under `dir` without the committer's
+    * `_SUCCESS` marker (and its `.crc`): the manifest is the commit
+    * record, and [[listParquet]] reads only `.parquet` names. */
+  private def writeData(df: DataFrame, dir: Path, mode: String = "errorifexists"): Unit =
+    df.write.mode(mode).option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+      .parquet(dir.toString)
 
   /** SPLIT commit, phase 2 — publish a [[stageAppend]] batch as the
     * next version (previous files + the staged ones).  The staged dir
@@ -409,16 +423,17 @@ object ManifestStore {
     var committed = -1L
     while (committed < 0) {
       val prev = currentVersion(spark, root)
-      prev.flatMap(v => schemaOf(spark, root, Some(v)))
-        .foreach(stored => requireSameSchema(stored, staged.schema, root))
+      val (stored, prevFiles) = snapshot(spark, root, prev)
+      stored.foreach(requireSameSchema(_, staged.schema, root))
       val next = prev.map(_ + 1).getOrElse(0L)
       val target = versionedDataDir(root, next, staged.label)
       require(f.rename(home, target),
         s"could not move staged data $home to $target")
+      // a fresh mtime keeps vacuum's age-gated v<N> sweep off the dir
+      // until the publish below lands, however old the stage is
+      f.setTimes(target, System.currentTimeMillis(), -1)
       try {
-        publish(spark, root, next, staged.schema,
-          prev.map(v => files(spark, root, Some(v))).getOrElse(Nil) ++
-            listParquet(spark, target))
+        publish(spark, root, next, staged.schema, prevFiles ++ listParquet(spark, target))
         committed = next
       } catch {
         case e: java.util.ConcurrentModificationException =>
@@ -496,7 +511,7 @@ object ManifestStore {
     val prev = currentVersion(spark, root)
     val next = prev.map(_ + 1).getOrElse(0L)
     val dataDir = versionedDataDir(root, next, label)
-    df.write.mode("errorifexists").parquet(dataDir.toString)
+    writeData(df, dataDir)
     try publish(spark, root, next, df.schema, listParquet(spark, dataDir))
     catch {
       case e: java.util.ConcurrentModificationException =>
@@ -512,13 +527,13 @@ object ManifestStore {
     * reading the old files until [[vacuum]].
     *
     * The files are packed, in manifest order, into bins of at most
-    * `targetFileBytes`, and ONE Spark job merges each bin in its own
-    * task by copying parquet row groups — column chunks, page indexes
-    * and footer key-value metadata byte for byte ([[mergeBin]]).  A
-    * bin whose files do not share one parquet schema and metadata, or
-    * whose row groups are too small to keep ([[MinCopyRowsPerGroup]]),
-    * is instead re-encoded by a coalesced rewrite that reads with the
-    * manifest's recorded schema, so no schema-inference job runs. */
+    * `targetFileBytes`; the driver reads every footer once to decide
+    * each bin ([[copyable]]).  ONE Spark job, run only if some bin
+    * copies, merges each copyable bin in its own task by copying row
+    * groups — column chunks, page indexes and footer key-value
+    * metadata byte for byte ([[copyRowGroups]]).  The other bins are
+    * re-encoded by a coalesced rewrite that reads with the manifest's
+    * recorded schema, so no schema-inference job runs. */
   def compact(spark: SparkSession, root: String,
               targetFileBytes: Long = 128L << 20): Long = {
     require(targetFileBytes >= (1L << 20), s"target below 1 MiB recreates the problem: $targetFileBytes")
@@ -526,22 +541,31 @@ object ManifestStore {
       throw new IllegalStateException(s"nothing to compact under $root"))
     val next = prev + 1
     val f = fs(spark, root)
-    val lines = manifestLines(spark, root, Some(prev))
-    val schema = headerSchema(lines)
-    val sized = lines.filterNot(_.startsWith("#"))
-      .map(p => p -> f.getFileStatus(new Path(p)).getLen)
+    val (schema, live) = snapshot(spark, root, Some(prev))
+    val sized = live.map(p => p -> f.getFileStatus(new Path(p)).getLen)
     val dataDir = versionedDataDir(root, next, "compact")
+    val bins = packBins(sized, targetFileBytes)
     // a schema-less (pre-schema-tracking) manifest has no schema to
     // publish for a copy: it takes the inferring rewrite whole
-    val bins = packBins(sized, targetFileBytes)
-    val merged = if (schema.isEmpty) bins.map(_ => false) else copyBins(spark, bins, dataDir)
-    val declined = bins.zip(merged).collect { case (bin, false) => bin }.flatten
+    val copy = if (schema.isEmpty) bins.map(_ => false) else {
+      val conf = hadoopConf(spark)
+      // one options object for every footer: ParquetFileReader.open
+      // without options builds a fresh Configuration per file
+      val options = org.apache.parquet.HadoopReadOptions.builder(conf).build()
+      bins.map(bin => copyable(bin.map { case (p, _) =>
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(p), conf), options)
+        try reader.getFooter finally reader.close()
+      }))
+    }
+    copyBins(spark, bins.zip(copy).collect { case (bin, true) => bin.map(_._1) }, dataDir)
+    val declined = bins.zip(copy).collect { case (bin, false) => bin }.flatten
     val published = if (declined.isEmpty) schema.get else {
       val bytes = declined.map(_._2).sum
       val n = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
       val rewritten = readFiles(spark, declined.map(_._1), schema)
       describing(spark, "ManifestStore.compact: rewrite") {
-        rewritten.coalesce(n).write.mode("append").parquet(dataDir.toString)
+        writeData(rewritten.coalesce(n), dataDir, "append")
       }
       schema.getOrElse(rewritten.schema)
     }
@@ -581,53 +605,39 @@ object ManifestStore {
     bins.result()
   }
 
-  /** One job, one task per bin: each task merges its bin into
-    * `dataDir` ([[mergeBin]]) or declines it.  Returns, per bin,
-    * whether it was merged.  Output names carry the task attempt, so a
-    * retried or speculative attempt never collides with another;
-    * files of attempts whose result the driver did not take are
-    * deleted here, so the dir holds exactly the merged bins. */
-  private def copyBins(spark: SparkSession, bins: Seq[Seq[(String, Long)]],
-                       dataDir: Path): Seq[Boolean] = {
-    if (bins.isEmpty) return Nil
+  /** One job, one task per bin: each task copies its bin's row groups
+    * into one file under `dataDir` ([[copyRowGroups]]); no job for no
+    * bins.  Output names carry the task attempt, so a retried or
+    * speculative attempt never collides with another; files of
+    * attempts whose result the driver did not take are deleted here,
+    * so the dir holds exactly one file per bin. */
+  private def copyBins(spark: SparkSession, bins: Seq[Seq[String]], dataDir: Path): Unit = {
+    if (bins.isEmpty) return
     val conf = new org.apache.spark.SerializableWritable(hadoopConf(spark))
     val dir = dataDir.toString
-    val outs = describing(spark, "ManifestStore.compact: copy row groups") {
-      spark.sparkContext.parallelize(bins.map(_.map(_._1)).zipWithIndex, bins.size)
+    val kept = describing(spark, "ManifestStore.compact: copy row groups") {
+      spark.sparkContext.parallelize(bins.zipWithIndex, bins.size)
         .map { case (bin, i) =>
           val attempt = org.apache.spark.TaskContext.get().attemptNumber()
-          mergeBin(conf.value, bin, new Path(dir, f"part-$i%05d-a$attempt-compact.parquet"))
-            .map(_.getName)
-        }.collect().toSeq
+          val out = new Path(dir, f"part-$i%05d-a$attempt-compact.parquet")
+          copyRowGroups(conf.value, bin, out)
+          out.getName
+        }.collect().toSet
     }
     val f = fs(spark, dir)
-    val kept = outs.flatten.toSet
-    if (f.exists(dataDir))
-      f.listStatus(dataDir).map(_.getPath)
-        .filter(p => p.getName.endsWith(".parquet") && !kept.contains(p.getName))
-        .foreach(f.delete(_, false))
-    outs.map(_.isDefined)
+    f.listStatus(dataDir).map(_.getPath)
+      .filter(p => p.getName.endsWith(".parquet") && !kept.contains(p.getName))
+      .foreach(f.delete(_, false))
   }
 
-  /** Merge `inputs` into `out` by copying their row groups with
-    * parquet's `ParquetRewriter`, when every input has the same
-    * parquet schema and the same footer key-value metadata (ignoring
-    * the rewriter's own `original.created.by`, so a compacted file
-    * merges again) and their row groups average at least
-    * [[MinCopyRowsPerGroup]] rows.  Returns the written path, or None
-    * (nothing written) when a check fails. */
-  private def mergeBin(conf: org.apache.hadoop.conf.Configuration,
-                       inputs: Seq[String], out: Path): Option[Path] = {
+  /** Whether [[copyRowGroups]] may merge files with these footers:
+    * they share one parquet schema and the same key-value metadata
+    * (ignoring the rewriter's own `original.created.by`, so a
+    * compacted file merges again), and their row groups average at
+    * least [[MinCopyRowsPerGroup]] rows. */
+  private def copyable(footers: Seq[org.apache.parquet.hadoop.metadata.ParquetMetadata]): Boolean = {
     import org.apache.parquet.hadoop.rewrite.ParquetRewriter
     import scala.jdk.CollectionConverters._
-    // one options object for every footer: ParquetFileReader.open
-    // without options builds a fresh Configuration per file
-    val options = org.apache.parquet.HadoopReadOptions.builder(conf).build()
-    val footers = inputs.map { p =>
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(p), conf), options)
-      try reader.getFooter finally reader.close()
-    }
     def keyValues(m: org.apache.parquet.hadoop.metadata.FileMetaData) =
       m.getKeyValueMetaData.asScala.toMap - ParquetRewriter.ORIGINAL_CREATED_BY_KEY
     val first = footers.head.getFileMetaData
@@ -636,9 +646,8 @@ object ManifestStore {
       m.getSchema == first.getSchema && keyValues(m) == keyValues(first)
     }
     val blocks = footers.flatMap(_.getBlocks.asScala)
-    if (!uniform || blocks.isEmpty ||
-        blocks.map(_.getRowCount).sum < MinCopyRowsPerGroup * blocks.size) None
-    else { copyRowGroups(conf, inputs, out); Some(out) }
+    uniform && blocks.nonEmpty &&
+      blocks.map(_.getRowCount).sum >= MinCopyRowsPerGroup * blocks.size
   }
 
   /** Concatenates the row groups of `inputs` (one parquet schema) into
@@ -785,9 +794,9 @@ object ManifestStore {
           f.delete(dataDir, true); ()
       }
     }
-    cur.flatMap(v => schemaOf(spark, root, Some(v)))
-      .foreach(stored => requireSameSchema(stored, df.schema, root))
-    df.write.mode("errorifexists").parquet(dataDir.toString)
+    val (stored, curFiles) = snapshot(spark, root, cur)
+    stored.foreach(requireSameSchema(_, df.schema, root))
+    writeData(df, dataDir)
     val newFiles = listParquet(spark, dataDir)
     // optimistic-retry publish: with several ARMED streams sharing the
     // root, two micro-batches legitimately race for the same version
@@ -801,14 +810,16 @@ object ManifestStore {
     var attempts = 0
     while (next < 0) {
       attempts += 1
-      val c2 = if (attempts == 1) cur else currentVersion(spark, root)
-      if (attempts > 1) // another commit landed: re-gate the schema against it
-        c2.flatMap(v => schemaOf(spark, root, Some(v)))
-          .foreach(stored => requireSameSchema(stored, df.schema, root))
+      val (c2, prevFiles) = if (attempts == 1) (cur, curFiles) else {
+        val c = currentVersion(spark, root)
+        val (s, fl) = snapshot(spark, root, c)
+        // another commit landed: re-gate the schema against it
+        s.foreach(requireSameSchema(_, df.schema, root))
+        (c, fl)
+      }
       val candidate = c2.map(_ + 1).getOrElse(0L)
       try {
-        publish(spark, root, candidate, df.schema,
-          c2.map(v => files(spark, root, Some(v))).getOrElse(Nil) ++ newFiles,
+        publish(spark, root, candidate, df.schema, prevFiles ++ newFiles,
           batch = Some((run, batchId)))
         next = candidate
       } catch {
@@ -1021,10 +1032,10 @@ object ManifestStore {
     * `keepVersions`, then drop the older manifests, then sweep
     * crash-orphaned data dirs (a committer that died between its data
     * write and its publish, before its own cleanup ran) that no
-    * surviving manifest references: versioned dirs older than the
-    * oldest retained manifest, and batch dirs whose id the ledger
-    * already maps to a version (committed, files since compacted
-    * away).  An UNLEDGERED batch dir is never touched — it may be the
+    * surviving manifest references: versioned dirs below the oldest
+    * retained manifest and over an hour old, and batch dirs whose id
+    * the ledger already maps to a version (committed, files since
+    * compacted away).  An UNLEDGERED batch dir is never touched — it may be the
     * live stream's in-flight write.  Returns the deleted file paths.
     * Run it only when every reader has moved past the dropped
     * versions and no committer is mid-flight on a version at or below
@@ -1085,35 +1096,31 @@ object ManifestStore {
     val knownRuns = ledAfter.entries.keySet.map(_._1) ++ ledAfter.floors.keySet
     val runByTag: Map[String, String] = knownRuns.map(r => runTag(r) -> r).toMap
     val oldestKept = keep.head
+    // the unledgered sweeps are age-gated a full hour, so a CONCURRENT
+    // committer's in-flight write is never pulled out from under it: a
+    // v<N> dir before its publish, a staged- dir (a live stager's write
+    // or a handle awaiting commitStaged), a .tmp before its rename
+    val cutoff = System.currentTimeMillis() - 3600L * 1000
     val orphanDirs =
       if (!f.exists(dataRoot)) Nil
-      else f.listStatus(dataRoot).toSeq.filter(_.isDirectory).map(_.getPath).filter { d =>
+      else f.listStatus(dataRoot).toSeq.filter(_.isDirectory).filter { s =>
+        val d = s.getPath
         val referenced = keepFiles.exists(_.startsWith(d.toString + "/"))
         val name = d.getName
+        val aged = s.getModificationTime < cutoff
         !referenced && (parseBatchDirName(name) match {
           case Some((id, tag)) =>
             runByTag.get(tag).exists(run =>
               ledAfter.entries.contains((run, id)) || id < ledAfter.floorOf(run))
+          case None if name.startsWith("staged-") => aged
           case None if name.startsWith("v") =>
-            name.stripPrefix("v").takeWhile(_.isDigit).toLongOption.exists(_ < oldestKept)
+            aged && name.stripPrefix("v").takeWhile(_.isDigit).toLongOption.exists(_ < oldestKept)
           case None => false
         })
       }
-    orphanDirs.foreach(d => f.delete(d, true))
-    // sweep stale publish/hint debris (a committer that died between
-    // create and rename, a failed hint write).  Age-gated a full hour
-    // so a CONCURRENT publisher's in-flight .tmp is never pulled out
-    // from under its rename.
-    val cutoff = System.currentTimeMillis() - 3600L * 1000
-    // staged-append dirs ([[stageAppend]]) are by definition
-    // uncommitted — referenced by no manifest ever — so an old one is
-    // a crashed stager's debris.  Same age gate: a LIVE stager's
-    // in-flight write (or a handle awaiting commitStaged) is recent.
-    if (f.exists(dataRoot))
-      f.listStatus(dataRoot).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("staged-") &&
-          s.getModificationTime < cutoff)
-        .foreach(s => f.delete(s.getPath, true))
+    orphanDirs.foreach(s => f.delete(s.getPath, true))
+    // stale publish/hint debris: a committer that died between create
+    // and rename, a failed hint write
     val mdir = manifestDir(root)
     if (f.exists(mdir))
       f.listStatus(mdir).toSeq
@@ -1135,7 +1142,7 @@ object ManifestStore {
   private[graft] def publish(spark: SparkSession, root: String, version: Long,
                              schema: StructType, fileList: Seq[String],
                              batch: Option[(String, Long)] = None): Unit = {
-    val f = fs(spark, root)
+    val f = rawFs(fs(spark, root))
     f.mkdirs(manifestDir(root))
     val tmp = new Path(manifestDir(root),
       s".tmp-$version-${java.util.UUID.randomUUID().toString.take(8)}")
@@ -1147,22 +1154,13 @@ object ManifestStore {
     try out.write((headers + fileList.mkString("\n") + "\n").getBytes("UTF-8"))
     finally out.close()
     val target = manifestPath(root, version)
-    // FileContext.rename with no OVERWRITE option REFUSES an existing
-    // target — server-side-atomic on HDFS; on the LOCAL fs it is an
-    // exists check + rename(2), so the per-root JVM lock closes the
-    // same-process TOCTOU window (cross-process local races remain
-    // the fs's caveat, like bare S3's)
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      target.toUri, hadoopConf(spark))
+    // put-if-absent (scaladoc step 3); FileContext.rename makes the
+    // same local check but forks a `readlink` per path without native IO
     lockFor(f, root).synchronized {
-      try fc.rename(tmp, target)
-      catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException |
-             _: java.nio.file.FileAlreadyExistsException |
-             _: org.apache.hadoop.fs.ParentNotDirectoryException =>
-          f.delete(tmp, false)
-          throw new java.util.ConcurrentModificationException(
-            s"version $version was committed concurrently under $root — re-read and retry")
+      if (f.exists(target) || !f.rename(tmp, target)) {
+        f.delete(tmp, false)
+        throw new java.util.ConcurrentModificationException(
+          s"version $version was committed concurrently under $root — re-read and retry")
       }
       // refresh the O(1)-discovery pointer.  BEST-EFFORT by contract:
       // the rename above already committed the version durably, so a

@@ -93,14 +93,13 @@ object ScaleRehearsal {
     spark.stop()
   }
 
-  /** Manifest-store overhead rehearsal: `n` ingest commits of
-    * lineitem slices through [[graft.sources.ManifestStore]] vs the
-    * same writes as RAW parquet appends — the atomicity layer must
-    * cost a constant few milliseconds per commit (one tmp write + one
-    * rename + a listing), independent of the data size; then one
-    * manifest compaction + vacuum, with row counts cross-checked at
-    * every step.  Run it against the 25× suite corpus to see the
-    * constant hold at scale. */
+  /** Manifest-store overhead rehearsal: `n` staged commits of lineitem
+    * slices through [[graft.sources.ManifestStore]] (stage and publish
+    * timed apart) vs the same writes as RAW parquet appends — the
+    * atomicity layer must cost a constant few milliseconds per commit,
+    * independent of the data size; then one manifest compaction +
+    * vacuum, with row counts cross-checked at every step.  Run it
+    * against the 25× suite corpus to see the constant hold at scale. */
   private def manifestRehearsal(spark: SparkSession, src: String, out: String, n: Int): Unit = {
     import graft.sources.ManifestStore
     require(n >= 2 && n <= 64, s"commits in [2, 64], got $n")
@@ -123,12 +122,16 @@ object ScaleRehearsal {
     // pays its codegen/page-cache warmup, so a fixed order would bill
     // the warmup entirely to one side (measured +0.5 s/commit of pure
     // ordering bias before this)
-    val (mWalls, rWalls) = (0 until n).map { i =>
+    val (stages, publishes, rWalls) = (0 until n).map { i =>
       def raw(): Double = time { slice(i).write.parquet(s"$rawRoot/slice$i") }
-      def man(): Double = time { ManifestStore.commitAppend(spark, mRoot, slice(i), s"slice$i"); () }
-      if (i % 2 == 0) { val m = man(); val r = raw(); (m, r) }
-      else { val r = raw(); val m = man(); (m, r) }
-    }.unzip
+      def man(): (Double, Double) = {
+        var staged: ManifestStore.Staged = null
+        val stage = time { staged = ManifestStore.stageAppend(spark, mRoot, slice(i), s"slice$i") }
+        (stage, time { ManifestStore.commitStaged(spark, mRoot, staged); () })
+      }
+      if (i % 2 == 0) { val (s, p) = man(); (s, p, raw()) }
+      else { val r = raw(); val (s, p) = man(); (s, p, r) }
+    }.unzip3
     require(ManifestStore.read(spark, mRoot).count() == total, "manifest store lost rows")
     val filesBefore = ManifestStore.files(spark, mRoot).size
     val cWall = time { ManifestStore.compact(spark, mRoot, 32L << 20); () }
@@ -138,8 +141,11 @@ object ScaleRehearsal {
     val vWall = time { ManifestStore.vacuum(spark, mRoot, keepVersions = 1); () }
     require(ManifestStore.read(spark, mRoot).count() == total, "vacuum broke the current version")
     println(f"manifest rehearsal over $total%,d rows x $n commits:")
-    println(f"  per-commit wall: manifest mean ${mWalls.sum / n}%.3f s vs raw append mean ${rWalls.sum / n}%.3f s " +
-      f"(atomicity overhead ${(mWalls.sum - rWalls.sum) / n}%+.3f s/commit)")
+    val mWall = (stages.sum + publishes.sum) / n
+    println(f"  per-commit wall: manifest mean $mWall%.3f s vs raw append mean ${rWalls.sum / n}%.3f s " +
+      f"(atomicity overhead ${mWall - rWalls.sum / n}%+.3f s/commit)")
+    println(f"  manifest split: stage mean ${stages.sum / n}%.3f s, publish mean ${publishes.sum / n}%.3f s " +
+      f"(min ${publishes.min}%.3f s, max ${publishes.max}%.3f s)")
     println(f"  compact ${cWall}%.2f s ($filesBefore -> $filesAfter files, $compacted%,d rows), " +
       f"vacuum ${vWall}%.2f s, counts identical at every step")
   }

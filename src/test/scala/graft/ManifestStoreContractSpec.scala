@@ -1,8 +1,9 @@
 package graft
 
 import java.net.URI
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{DelegateToFileSystem, Path, RawLocalFileSystem}
+import java.util.concurrent.atomic.AtomicLong
+import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
 import graft.sources.ManifestStore
 
 /** A FileSystem whose `rename` silently OVERWRITES an existing
@@ -15,44 +16,67 @@ class S3LikeFileSystem extends RawLocalFileSystem {
   override def getScheme: String = "s3mock"
   override def getUri: URI = URI.create("s3mock:///")
   override def rename(src: Path, dst: Path): Boolean = {
-    if (exists(dst)) delete(dst, true)
+    if (super.exists(dst)) delete(dst, true)
     super.rename(src, dst)
   }
+  // while set, `exists` misses committed manifests: the check ran
+  // before another process's rename of the same version landed — the
+  // cross-process check-then-rename race no JVM lock can close,
+  // modeled deterministically
+  override def exists(f: Path): Boolean =
+    !(S3LikeFileSystem.staleChecks && f.getParent != null &&
+      f.getParent.getName == "_manifests" && f.getName.matches("v\\d+\\.json")) && super.exists(f)
 }
 
-/** The FileContext (AbstractFileSystem) twin: skips the CLIENT-SIDE
-  * dst-exists check that rename-refuses-overwrite filesystems rely on
-  * — on an eventually-consistent store that check is a TOCTOU race at
-  * best, so the worst case (it never fires) is modeled
-  * deterministically. */
-class S3LikeAbstractFs(uri: URI, conf: Configuration)
-  extends DelegateToFileSystem(uri, new S3LikeFileSystem, conf, "s3mock", false) {
-  override def renameInternal(src: Path, dst: Path, overwrite: Boolean): Unit = {
-    if (!fsImpl.rename(src, dst))
-      throw new java.io.IOException(s"rename $src -> $dst failed")
+object S3LikeFileSystem {
+  @volatile private var staleChecks = false
+  /** Runs `body` with every manifest `exists` check answering "absent". */
+  def racing[T](body: => T): T = {
+    staleChecks = true
+    try body finally staleChecks = false
   }
 }
 
-/** Exercises ManifestStore against the contract-violating filesystem:
-  * the documented caveat must be EXACTLY the degradation observed —
-  * optimistic concurrency (loser detection) is lost, nothing else.
-  * The complementary fact — that a rename-refusing fs catches the
-  * same race loudly — is pinned by ManifestStoreSpec's "racing
-  * committers" test. */
+/** The local filesystem, counting the calls that start a subprocess
+  * when Hadoop runs without native IO: `getFileLinkStatus` (a
+  * `readlink`) and `setPermission` (a `chmod`). */
+class CountingLocalFileSystem extends RawLocalFileSystem {
+  override def getScheme: String = "countfs"
+  override def getUri: URI = URI.create("countfs:///")
+  override def getFileLinkStatus(f: Path): FileStatus = {
+    CountingLocalFileSystem.linkStatus.incrementAndGet()
+    super.getFileLinkStatus(f)
+  }
+  override def setPermission(p: Path, permission: FsPermission): Unit = {
+    CountingLocalFileSystem.permissions.incrementAndGet()
+    super.setPermission(p, permission)
+  }
+}
+
+object CountingLocalFileSystem {
+  val linkStatus, permissions = new AtomicLong(0L)
+}
+
+/** Exercises ManifestStore against shim filesystems.  On the
+  * contract-violating one the documented caveat must be EXACTLY the
+  * degradation observed — optimistic concurrency (loser detection)
+  * across processes is lost, nothing else.  The complementary fact —
+  * that the local fs catches the same race loudly — is pinned by
+  * ManifestStoreSpec's "racing committers" test.  On the counting
+  * one, a commit's metadata work must start no subprocess beyond its
+  * two file creations. */
 class ManifestStoreContractSpec extends SparkSpec {
   import spark.implicits._
 
-  private def withS3Root(body: String => Unit): Unit = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_s3mock").toFile
-    // register the shim for Spark jobs (scans/writes resolve the
-    // scheme through the context conf) AND for ManifestStore's cached
-    // per-session conf (FileContext + direct fs calls)
-    for (conf <- Seq(spark.sparkContext.hadoopConfiguration,
-                     ManifestStore.hadoopConf(spark))) {
-      conf.set("fs.s3mock.impl", classOf[S3LikeFileSystem].getName)
-      conf.set("fs.AbstractFileSystem.s3mock.impl", classOf[S3LikeAbstractFs].getName)
-    }
-    try body("s3mock:" + tmp.getAbsolutePath)
+  /** A fresh store root on the `scheme` filesystem implemented by
+    * `impl`, registered for Spark jobs (scans and writes resolve the
+    * scheme through the context conf) AND for ManifestStore's cached
+    * per-session conf. */
+  private def withRoot(scheme: String, impl: Class[_])(body: String => Unit): Unit = {
+    val tmp = java.nio.file.Files.createTempDirectory(s"graft_$scheme").toFile
+    for (conf <- Seq(spark.sparkContext.hadoopConfiguration, ManifestStore.hadoopConf(spark)))
+      conf.set(s"fs.$scheme.impl", impl.getName)
+    try body(s"$scheme:" + tmp.getAbsolutePath)
     finally {
       def rm(f: java.io.File): Unit = {
         Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
@@ -62,7 +86,7 @@ class ManifestStoreContractSpec extends SparkSpec {
   }
 
   test("silently-overwriting rename: exactly the documented guarantee degrades, and only that one") {
-    withS3Root { root =>
+    withRoot("s3mock", classOf[S3LikeFileSystem]) { root =>
       // the store WORKS on the shim for the single-writer contract:
       // commits, snapshot reads, time travel, maintenance
       ManifestStore.commitAppend(spark, root, Seq(1L, 2L).toDF("x"), "day0")
@@ -73,13 +97,18 @@ class ManifestStoreContractSpec extends SparkSpec {
       val v1Files = ManifestStore.files(spark, root, Some(1L))
       val schema = ManifestStore.schemaOf(spark, root).get
 
-      // THE DEGRADATION: two committers of the same version.  On a
-      // rename-refusing fs the second publish throws
-      // ConcurrentModificationException (ManifestStoreSpec pins it);
-      // here the losing committer SILENTLY WINS — the lost update the
+      // THE DEGRADATION: two committers of the same version.  In one
+      // process the second publish throws
+      // ConcurrentModificationException even here — its exists check
+      // runs under the per-root lock (ManifestStoreSpec pins the same
+      // on the local fs) — but when the check raced another process's
+      // rename, the losing committer SILENTLY WINS: the lost update the
       // scaladoc tells users to prevent with a locking catalog.
       ManifestStore.publish(spark, root, 2L, schema, v1Files) // "winner"
-      ManifestStore.publish(spark, root, 2L, schema, v0Files) // silent clobber
+      assertThrows[java.util.ConcurrentModificationException](
+        ManifestStore.publish(spark, root, 2L, schema, v0Files))
+      assert(ManifestStore.files(spark, root, Some(2L)) == v1Files)
+      S3LikeFileSystem.racing(ManifestStore.publish(spark, root, 2L, schema, v0Files)) // silent clobber
       assert(ManifestStore.files(spark, root, Some(2L)) == v0Files,
         "on the bare-S3 shape the last writer wins silently — the documented degradation")
 
@@ -109,6 +138,29 @@ class ManifestStoreContractSpec extends SparkSpec {
       ManifestStore.compact(spark, root, 1L << 20)
       ManifestStore.vacuum(spark, root, keepVersions = 1)
       assert(ManifestStore.read(spark, root).as[Long].collect().sorted.toSeq == Seq(1L, 2L, 9L))
+    }
+  }
+
+  test("a staged commit publishes without readlink, chmods only its two metadata files, leaves no _SUCCESS") {
+    withRoot("countfs", classOf[CountingLocalFileSystem]) { root =>
+      ManifestStore.commitAppend(spark, root, Seq(1L, 2L).toDF("x"), "day0")
+      for (day <- 1 to 2) {
+        val staged = ManifestStore.stageAppend(spark, root, Seq(day + 2L).toDF("x"), s"day$day")
+        val (links, perms) = (CountingLocalFileSystem.linkStatus.get, CountingLocalFileSystem.permissions.get)
+        ManifestStore.commitStaged(spark, root, staged)
+        assert(CountingLocalFileSystem.linkStatus.get - links == 0,
+          "publish must not resolve links (FileContext.rename's readlink per path)")
+        val chmods = CountingLocalFileSystem.permissions.get - perms
+        assert(chmods <= 2, s"one commitStaged set $chmods permissions: only the tmp manifest and _latest may")
+      }
+      val dataDirs = new java.io.File(new java.net.URI(root).getPath, "data").listFiles.filter(_.isDirectory)
+      assert(dataDirs.length == 3 && dataDirs.forall(_.getName.startsWith("v")))
+      for (d <- dataDirs) assert(d.list.toSeq.forall(_.endsWith(".parquet")),
+        s"${d.getName} holds more than its parquet files: ${d.list.toSeq}")
+      ManifestStore.compact(spark, root, 1L << 20)
+      assert(ManifestStore.read(spark, root).as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L, 4L))
+      assert(!new java.io.File(new java.net.URI(root).getPath, "data").listFiles
+        .exists(d => new java.io.File(d, "_SUCCESS").exists), "no data dir may hold a _SUCCESS marker")
     }
   }
 }

@@ -98,7 +98,7 @@ class ManifestStoreSpec extends SparkSpec {
       val want = ManifestStore.read(spark, root).orderBy("id").collect().toSeq
       val schema = ManifestStore.read(spark, root).schema
       val jobs = jobsDuring(ManifestStore.compact(spark, root))
-      assert(jobs == Seq(CopyJob, RewriteJob), s"$what: declined copy, then the rewrite alone: $jobs")
+      assert(jobs == Seq(RewriteJob), s"$what: the driver declines the copy, so the rewrite runs alone: $jobs")
       val merged = ManifestStore.files(spark, root)
       assert(merged.map(rowGroups).sum == 1, what)
       assert(ManifestStore.read(spark, root).schema == schema, what)
@@ -242,6 +242,24 @@ class ManifestStoreSpec extends SparkSpec {
       // the fresh one still commits fine after the vacuum
       ManifestStore.commitStaged(spark, root, fresh)
       assert(ManifestStore.read(spark, root).as[Long].collect().sorted.toSeq == Seq(1L, 2L))
+    }
+  }
+
+  test("vacuum's v<N> orphan sweep is age-gated: a committer between rename and publish keeps its data") {
+    withRoot { root =>
+      for (d <- 0 until 3) ManifestStore.commitAppend(spark, root, Seq(d.toLong).toDF("x"), s"day$d")
+      // unreferenced versioned dirs below the retained horizon: one a
+      // slow committer renamed moments ago and has not yet published,
+      // one a committer that crashed hours ago
+      val fresh = new java.io.File(s"$root/data/v1-slow-0000aaaa")
+      val aged = new java.io.File(s"$root/data/v1-crashed-0000bbbb")
+      Seq(98L).toDF("x").write.parquet(fresh.getPath)
+      Seq(99L).toDF("x").write.parquet(aged.getPath)
+      aged.setLastModified(System.currentTimeMillis() - 2 * 3600L * 1000)
+      ManifestStore.vacuum(spark, root, keepVersions = 1)
+      assert(fresh.exists, "a fresh unreferenced v<N> dir must survive vacuum")
+      assert(!aged.exists, "an aged unreferenced v<N> dir must be swept")
+      assert(ManifestStore.read(spark, root).as[Long].collect().sorted.toSeq == Seq(0L, 1L, 2L))
     }
   }
 
@@ -490,9 +508,11 @@ class ManifestStoreSpec extends SparkSpec {
       val v1Dirs = new java.io.File(s"$root/data").listFiles.filter(_.getName.startsWith("v1-compact"))
       assert(v1Dirs.length == 1, "a losing compaction must not leak its never-referenced rewrite")
       // crash orphan: a dir from a committer that died pre-publish,
-      // below the retention horizon — vacuum sweeps it once the
-      // retained manifests reference nothing in it
+      // below the retention horizon and past the age gate — vacuum
+      // sweeps it once the retained manifests reference nothing in it
       Seq(99L).toDF("x").write.parquet(s"$root/data/v0-crashed")
+      new java.io.File(s"$root/data/v0-crashed").setLastModified(
+        System.currentTimeMillis() - 2 * 3600L * 1000)
       // in-flight dir AT/ABOVE the horizon and an unledgered batch
       // dir: both must survive vacuum
       Seq(98L).toDF("x").write.parquet(s"$root/data/v7-inflight")
@@ -798,9 +818,9 @@ class ManifestStoreSpec extends SparkSpec {
       ManifestStore.commitAppend(spark, root, Seq(1L).toDF("x"), "day0")
       // drive the REAL race at the publish primitive: both committers
       // read current = 0 and target version 1; the second publish of
-      // v1 must lose LOUDLY (FileContext.rename refuses the existing
-      // target — plain FileSystem.rename on the local fs would have
-      // silently overwritten the winner)
+      // v1 must lose LOUDLY (publish checks that the target is absent
+      // under the per-root lock — the local fs's rename alone would
+      // have silently overwritten the winner)
       val keep = ManifestStore.files(spark, root)
       val schema = ManifestStore.schemaOf(spark, root).get
       ManifestStore.publish(spark, root, 1L, schema, keep) // the winner
