@@ -108,9 +108,9 @@ object Layout {
   def compactSmallFiles(spark: org.apache.spark.sql.SparkSession, inPath: String,
                         outPath: String, targetFileBytes: Long = 128L << 20): Int = {
     val p = new org.apache.hadoop.fs.Path(inPath)
-    // per-session cached conf — newHadoopConf() clones the whole
+    // per-session cached fs — newHadoopConf() clones the whole
     // Spark conf (~tens of ms) on every call
-    val fs = p.getFileSystem(graft.sources.ManifestStore.hadoopConf(spark))
+    val fs = graft.sources.ManifestStore.fs(spark, inPath)
     compactionGuard(fs, inPath, outPath, targetFileBytes)
     val bytes = fs.getContentSummary(p).getLength
     val n = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
@@ -143,7 +143,7 @@ object Layout {
                          targetFileBytes: Long = 128L << 20): Map[String, Int] = {
     require(partitionCols.nonEmpty, "use compactSmallFiles for unpartitioned tables")
     val root = new org.apache.hadoop.fs.Path(inPath)
-    val fs = root.getFileSystem(graft.sources.ManifestStore.hadoopConf(spark))
+    val fs = graft.sources.ManifestStore.fs(spark, inPath)
     compactionGuard(fs, inPath, outPath, targetFileBytes)
     // walk partition directories depth = partitionCols.size (listing
     // only — O(dirs + files) names, no data reads); the suffix is

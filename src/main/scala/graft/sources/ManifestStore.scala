@@ -40,8 +40,19 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *     fs's rename(2) replaces one, so cross-PROCESS local races stay
   *     a documented caveat, and bare S3 needs a locking catalog, like
   *     every manifest design.  Written through the raw, checksum-free
-  *     fs, a publish starts no `readlink` and only its two file
-  *     creations' `chmod`s on a local fs without native IO.
+  *     fs, a publish starts no `readlink`, and no `chmod` either (next
+  *     paragraph).
+  *
+  * On a `file:` root every store write — the data jobs' committer,
+  * tasks and stats tracker, the compaction's row-group copy, and the
+  * metadata files — goes through [[LocalFs]]: Hadoop without native IO
+  * forks a `chmod` for each file and dir the local fs creates with a
+  * mode, and LocalFs sets the same mode with one java.nio call, so a
+  * commit starts no subprocess.  The store's Hadoop conf and its data
+  * writes set `fs.file.impl` to it and `fs.file.impl.disable.cache`,
+  * because the FileSystem cache is keyed on scheme, not impl class,
+  * and would hand back the session's stock instance.  Spark's reads
+  * keep the session's stock fs; they fork nothing.
   *
   * Readers resolve ONE manifest (latest or a pinned `version`) and
   * read exactly the files it lists — a torn state is unobservable,
@@ -64,8 +75,19 @@ import org.apache.spark.sql.types.{DataType, StructType}
   */
 object ManifestStore {
 
-  private def fs(spark: SparkSession, root: String): FileSystem =
-    new Path(root).getFileSystem(hadoopConf(spark))
+  /** The store's filesystem for `root`: a `file:` root gets the
+    * session's one [[LocalFs]] (the conf disables the FileSystem cache
+    * for `file:`, so a lookup per call would build one per call). */
+  private[graft] def fs(spark: SparkSession, root: String): FileSystem = {
+    val s = sessionFs(spark)
+    val p = new Path(root)
+    val scheme = Option(p.toUri.getScheme).getOrElse(FileSystem.getDefaultUri(s.conf).getScheme)
+    if (scheme == "file") s.local else p.getFileSystem(s.conf)
+  }
+
+  private final class SessionFs(val conf: org.apache.hadoop.conf.Configuration) {
+    lazy val local: FileSystem = FileSystem.getLocal(conf)
+  }
 
   // newHadoopConf() clones the WHOLE Spark conf into a fresh Hadoop
   // Configuration (~tens of ms); a commit touches the filesystem
@@ -78,17 +100,24 @@ object ManifestStore {
   // collectable the moment they are unreachable, never pinned by the
   // cache.  A benign double-compute under concurrency beats a lock
   // held across the clone.
-  private val confCache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession, org.apache.hadoop.conf.Configuration]())
-  private[graft] def hadoopConf(spark: SparkSession): org.apache.hadoop.conf.Configuration = {
-    val cached = confCache.get(spark)
+  private val sessionCache = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, SessionFs]())
+  private def sessionFs(spark: SparkSession): SessionFs = {
+    val cached = sessionCache.get(spark)
     if (cached != null) cached
     else {
-      val fresh = spark.sessionState.newHadoopConf()
-      confCache.put(spark, fresh)
+      val conf = spark.sessionState.newHadoopConf()
+      LocalFs.Conf.foreach { case (k, v) => conf.set(k, v) }
+      val fresh = new SessionFs(conf)
+      sessionCache.put(spark, fresh)
       fresh
     }
   }
+
+  /** The session's Hadoop conf for store writes: `file:` resolves to
+    * [[LocalFs]].  Spark's own reads keep the session's stock fs. */
+  private[graft] def hadoopConf(spark: SparkSession): org.apache.hadoop.conf.Configuration =
+    sessionFs(spark).conf
 
   // versioned data dirs carry a uuid tail: two racing committers of
   // the same version (or a retry after a crash that left debris) must
@@ -393,10 +422,14 @@ object ManifestStore {
 
   /** Writes `df` as parquet under `dir` without the committer's
     * `_SUCCESS` marker (and its `.crc`): the manifest is the commit
-    * record, and [[listParquet]] reads only `.parquet` names. */
+    * record, and [[listParquet]] reads only `.parquet` names.  The
+    * job's committer, tasks and stats tracker create files and dirs
+    * through [[LocalFs]] on a `file:` dir ([[WriteOptions]]). */
   private def writeData(df: DataFrame, dir: Path, mode: String = "errorifexists"): Unit =
-    df.write.mode(mode).option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-      .parquet(dir.toString)
+    df.write.mode(mode).options(WriteOptions).parquet(dir.toString)
+
+  private[graft] val WriteOptions: Map[String, String] =
+    LocalFs.Conf + ("mapreduce.fileoutputcommitter.marksuccessfuljobs" -> "false")
 
   /** SPLIT commit, phase 2 — publish a [[stageAppend]] batch as the
     * next version (previous files + the staged ones).  The staged dir
@@ -445,6 +478,22 @@ object ManifestStore {
             throw new StagedCommitConflict(
               s"${e.getMessage} (staged data preserved at $home after $maxRetries retries)", staged)
           }
+        case scala.util.control.NonFatal(e) =>
+          // an IO failure (the .tmp- create or write under disk
+          // pressure): move the data home so `staged` stays committable
+          // — under its v<N> name vacuum would sweep it.  Not if v<next>
+          // lists it (the put landed after all) or cannot be read to
+          // rule that out: a committed version must never lose its data.
+          val prefix = f.makeQualified(target).toString + "/"
+          val unpublished = try !f.exists(manifestPath(root, next)) ||
+            !files(spark, root, Some(next)).exists(_.startsWith(prefix))
+          catch { case scala.util.control.NonFatal(_) => false }
+          if (unpublished) {
+            require(f.rename(target, home),
+              s"publish of v$next failed (${e.getMessage}) and could not move staged data $target back to $home")
+            f.setTimes(home, System.currentTimeMillis(), -1)
+          }
+          throw e
       }
     }
     committed
@@ -1146,13 +1195,19 @@ object ManifestStore {
     f.mkdirs(manifestDir(root))
     val tmp = new Path(manifestDir(root),
       s".tmp-$version-${java.util.UUID.randomUUID().toString.take(8)}")
-    val out = f.create(tmp, false)
     val headers = SchemaHeader + schema.json + "\n" +
       batch.map { case (run, b) =>
         BatchHeader + b + (if (run.isEmpty) "" else "\t" + run) + "\n"
       }.getOrElse("")
-    try out.write((headers + fileList.mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
+    try {
+      val out = f.create(tmp, false)
+      try out.write((headers + fileList.mkString("\n") + "\n").getBytes("UTF-8"))
+      finally out.close()
+    } catch {
+      case scala.util.control.NonFatal(e) => // no .tmp- debris, as in writeHint
+        try { f.delete(tmp, false); () } catch { case scala.util.control.NonFatal(_) => () }
+        throw e
+    }
     val target = manifestPath(root, version)
     // put-if-absent (scaladoc step 3); FileContext.rename makes the
     // same local check but forks a `readlink` per path without native IO

@@ -2,8 +2,9 @@ package graft
 
 import java.net.URI
 import java.util.concurrent.atomic.AtomicLong
-import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FSDataOutputStream, FileStatus, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
 import graft.sources.ManifestStore
 
 /** A FileSystem whose `rename` silently OVERWRITES an existing
@@ -57,6 +58,27 @@ object CountingLocalFileSystem {
   val linkStatus, permissions = new AtomicLong(0L)
 }
 
+/** The local filesystem whose next `.tmp-` manifest, once armed,
+  * fails its write the way a full disk does: the create succeeds and
+  * the bytes do not land. */
+class FailingTmpFileSystem extends RawLocalFileSystem {
+  override def getScheme: String = "failtmp"
+  override def getUri: URI = URI.create("failtmp:///")
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int, replication: Short,
+                      blockSize: Long, progress: Progressable): FSDataOutputStream = {
+    val out = super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+    if (!f.getName.startsWith(".tmp-") || !FailingTmpFileSystem.armed.getAndSet(false)) out
+    else new FSDataOutputStream(new java.io.OutputStream {
+      override def write(b: Int): Unit = throw new java.io.IOException("No space left on device")
+      override def close(): Unit = out.close()
+    }, null)
+  }
+}
+
+object FailingTmpFileSystem {
+  val armed = new java.util.concurrent.atomic.AtomicBoolean(false)
+}
+
 /** Exercises ManifestStore against shim filesystems.  On the
   * contract-violating one the documented caveat must be EXACTLY the
   * degradation observed — optimistic concurrency (loser detection)
@@ -64,7 +86,8 @@ object CountingLocalFileSystem {
   * that the local fs catches the same race loudly — is pinned by
   * ManifestStoreSpec's "racing committers" test.  On the counting
   * one, a commit's metadata work must start no subprocess beyond its
-  * two file creations. */
+  * two file creations.  On the failing one, a publish that cannot
+  * write its manifest must leave the staged batch committable. */
 class ManifestStoreContractSpec extends SparkSpec {
   import spark.implicits._
 
@@ -161,6 +184,24 @@ class ManifestStoreContractSpec extends SparkSpec {
       assert(ManifestStore.read(spark, root).as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L, 4L))
       assert(!new java.io.File(new java.net.URI(root).getPath, "data").listFiles
         .exists(d => new java.io.File(d, "_SUCCESS").exists), "no data dir may hold a _SUCCESS marker")
+    }
+  }
+
+  test("a publish IO failure leaves the staged handle committable and no .tmp- debris") {
+    withRoot("failtmp", classOf[FailingTmpFileSystem]) { root =>
+      ManifestStore.commitAppend(spark, root, Seq(1L, 2L).toDF("x"), "day0")
+      val staged = ManifestStore.stageAppend(spark, root, Seq(3L, 4L).toDF("x"), "day1")
+      FailingTmpFileSystem.armed.set(true)
+      val err = intercept[java.io.IOException](ManifestStore.commitStaged(spark, root, staged))
+      assert(err.getMessage.contains("No space left"))
+      val local = new java.net.URI(root).getPath
+      assert(new java.io.File(staged.dir.stripPrefix("failtmp:")).isDirectory,
+        "the failed publish must move the data back to its staged- dir")
+      assert(!new java.io.File(local, "_manifests").list.exists(_.startsWith(".tmp-")),
+        "the failed publish must delete its .tmp- manifest")
+      assert(ManifestStore.currentVersion(spark, root).contains(0L))
+      assert(ManifestStore.commitStaged(spark, root, staged) == 1L)
+      assert(ManifestStore.read(spark, root).as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L, 4L))
     }
   }
 }
