@@ -40,8 +40,9 @@ object BenchSession {
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
   }
 
-  /** The `SparkEntry.queries` slots whose name contains any of `parts`
-    * (every slot when `parts` is empty), in name order. */
+  /** The slots (the [[graft.slots]] table, through
+    * `SparkEntry.queries`) whose name contains any of `parts` (every
+    * slot when `parts` is empty), in name order. */
   def select(parts: Seq[String]): Seq[(String, (SparkSession, String) => DataFrame)] =
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => parts.isEmpty || parts.exists(name.contains) }

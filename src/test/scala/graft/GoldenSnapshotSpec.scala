@@ -7,13 +7,16 @@ import java.nio.file.{Files, Path}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
-/** Row-level regression snapshots for the queries the DuckDB oracle
-  * cannot express (`no_oracle` in the driver's correctness gate):
-  * MinHash-LSH, SimHash, LSH-ANN, healpix aggregation, multimodal
-  * metadata, verified dedup, embedding near-dup.
+/** Row-level regression snapshots: a second check, beside the DuckDB
+  * oracle, on the slots whose operators are easiest to break without
+  * changing a row count — MinHash-LSH, SimHash, LSH-ANN, healpix
+  * aggregation, multimodal metadata, verified dedup, embedding
+  * near-dup, BPE merges.  14 of the 15 also have an oracle;
+  * `q95d_jpeg_neardup` (lossy JPEG, no closed-form mirror) is the one
+  * slot pinned here only.
   *
-  * Without these, a wrong-but-row-count-preserving change to any of
-  * those operators would pass the whole suite.  Each query runs on the
+  * The pin catches such a change inside `sbt test`, without a Verify
+  * run and a DuckDB install.  Each query runs on the
   * committed sf0.01 corpus and must reproduce the committed fixture
   * byte-for-byte after canonicalization (columns sorted by name, rows
   * sorted, floats rounded to 6 dp — the same discipline the driver's

@@ -3,10 +3,12 @@
 
 The driver (per VERDICT r1) sorts columns by name, sorts rows, and hashes
 the rendered values of the Spark parquet dump vs the DuckDB oracle result.
-check_oracle.py's 1e-9 relative tolerance masked 9 hash misses in round 1;
-this checker renders every cell to a canonical string (repr for floats →
-bit-exact requirement) and compares the two frames byte-for-byte, also
-reporting dtype pairs so decimal-vs-float divergence is visible.
+A 1e-9 relative float tolerance masked 9 hash misses in round 1, so this
+checker renders every cell to a canonical string (repr for floats →
+bit-exact requirement; ints as `3`, floats as `3.0`, so an int-vs-float
+column fails) and compares the two frames byte-for-byte, also reporting
+dtype pairs so decimal-vs-float divergence is visible.  It is the only
+oracle checker (`tools/gate.sh` runs it).
 
 Usage: python3 tools/strict_check.py [sfdir] [verify_out_dir] [only_query...]
 """
