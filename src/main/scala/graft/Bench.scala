@@ -1,6 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
+import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
 
 /** Driver-run benchmark: every SparkEntry query against
@@ -31,70 +34,131 @@ import java.util.concurrent.atomic.AtomicInteger
   * ACROSS passes.  Same total work, but a query's two samples are
   * separated by roughly half the suite (~30–60 s), longer than any
   * observed burst, so one burst can no longer taint both.
+  *
+  * LAYERS: each kept run's profile splits `sec` into `build_s` (the
+  * slot's builder), `plan_s` (the noop write's optimization and
+  * physical planning) and `exec_s` (the rest: analysis, jobs, AQE
+  * re-planning), and counts the `build_jobs` that started before the
+  * builder returned.  The big line also records the host around each
+  * pass: the session's cores, /proc/loadavg and the steal seconds.
   */
 object Bench {
-  def main(args: Array[String]): Unit = {
-    val sfDir = BenchSession.sfDir
-    val spark = BenchSession.create()
+
+  /** One timed execution of a slot: wall seconds, the jobs and stages
+    * it ran, and its layers (see the object doc).  `planS` is −1 when
+    * the write's planning report did not arrive within the drain
+    * bound; `execS` then holds plan and exec together. */
+  private[graft] final case class Run(sec: Double, jobs: Int, stages: Int,
+                                      buildS: Double, planS: Double, buildJobs: Int) {
+    def execS: Double = sec - buildS - math.max(planS, 0.0)
+    def json: String =
+      s"""{"sec":$sec,"jobs":$jobs,"stages":$stages,"build_s":$buildS,"plan_s":$planS,""" +
+        s""""exec_s":$execS,"build_jobs":$buildJobs}"""
+  }
+
+  /** Times slots in `spark` through a noop-sink write, listening for
+    * the jobs, stages and write planning each run causes.  `close`
+    * removes the job listener. */
+  private[graft] final class Runner(spark: SparkSession, sfDir: String) extends AutoCloseable {
     // job/stage tally: every cross-round perf dispute so far reduced to
     // "how many sequential jobs did this query run" (sequential job
     // count is what a loaded driver machine amplifies) — record it per
     // query so a verdict can separate contention from regression.
-    // Counters are read after a listener-bus drain (waitForEmptyQueue
-    // below) so late-arriving events land before the snapshot.
-    val jobCount = new AtomicInteger(0)
-    val stageCount = new AtomicInteger(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        jobCount.incrementAndGet()
-        if (sys.env.contains("SPARK_GRAFT_JOBDEBUG")) {
-          // properties can be null on events from internal jobs — an NPE
-          // here would be swallowed by the listener bus but logged per job
-          val site = Option(e.properties)
-            .flatMap(p => Option(p.getProperty("callSite.short"))).getOrElse("?")
-          println(s"JOB ${e.jobId}: $site stages=${e.stageInfos.map(_.name).mkString(" | ")}")
-        }
-        ()
-      }
+    // Job START TIMES, not a thread-local property, attribute a job to
+    // build or exec: stream and pool threads launch build jobs too.
+    private val jobStarts = new ConcurrentLinkedQueue[java.lang.Long]()
+    private val stageCount = new AtomicInteger(0)
+    private val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobStarts.add(e.time); () }
       override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = { stageCount.incrementAndGet(); () }
-    })
-    // the listener bus is async: poll until both counters hold still so
-    // a snapshot never misses events still in flight (bounded wait)
-    def drainListeners(): Unit = {
-      var last = (-1, -1)
+    }
+    // `save()` runs the write through an inner QueryExecution with its
+    // own planning tracker, so `df.queryExecution.tracker` never sees
+    // the write's planning; that inner execution is reported here as
+    // "overwrite"
+    private val writes = new AtomicInteger(0)
+    @volatile private var writePlanS = -1.0
+    private val writeListener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (funcName == "overwrite") {
+          val phases = qe.tracker.phases
+          writePlanS = Seq("optimization", "planning").flatMap(phases.get).map(_.durationMs).sum / 1e3
+          writes.incrementAndGet(); ()
+        }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.sparkContext.addSparkListener(jobListener)
+
+    // the listener bus is async: poll until the counters hold still and
+    // `settled` holds, so a snapshot never misses events still in
+    // flight (bounded wait)
+    private def drain(settled: => Boolean): Unit = {
+      def snap = (jobStarts.size, stageCount.get, writes.get)
+      var last = (-1, -1, -1)
       var spins = 0
-      while (spins < 50 && last != ((jobCount.get, stageCount.get))) {
-        last = (jobCount.get, stageCount.get)
+      while (spins < 50 && (last != snap || !settled)) {
+        last = snap
         Thread.sleep(20)
         spins += 1
       }
     }
-    val selected = BenchSession.select(args.toSeq)
-    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    // (sec, jobs, stages) for one execution; job/stage deltas bracket
-    // the run with a listener-bus drain on each side
-    def runOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Int, Int) = {
+
+    /** One run of `fn`: the timed region is the builder plus the
+      * noop-sink write; the listener drains bracket it. */
+    def runOnce(fn: (SparkSession, String) => DataFrame): Either[String, Run] = {
       BenchSession.cleanBlocks(spark)
-      drainListeners()
-      val (j0, s0) = (jobCount.get, stageCount.get)
+      drain(true)
+      jobStarts.clear()
+      val (s0, w0) = (stageCount.get, writes.get)
       val t0 = System.nanoTime()
       // noop-sink write: materializes every output column (a bare count()
       // lets Catalyst prune projection-only queries down to a row-count scan)
       try {
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        val sec = (System.nanoTime() - t0) / 1e9
-        drainListeners()
-        (sec, jobCount.get - j0, stageCount.get - s0)
+        val df = fn(spark, sfDir)
+        val t1 = System.nanoTime()
+        val builtMs = System.currentTimeMillis()
+        // the write reports to the listeners of ITS session, and a slot
+        // may return a frame of a child session (the events reader)
+        val listeners = df.sparkSession.listenerManager
+        listeners.register(writeListener)
+        try {
+          df.write.format("noop").mode("overwrite").save()
+          val sec = (System.nanoTime() - t0) / 1e9
+          drain(writes.get > w0)
+          val starts = jobStarts.toArray(Array.empty[java.lang.Long])
+          Right(Run(sec, starts.length, stageCount.get - s0, (t1 - t0) / 1e9,
+            if (writes.get > w0) writePlanS else -1.0, starts.count(_ <= builtMs)))
+        } finally listeners.unregister(writeListener)
       } catch {
         case e: Throwable =>
           // strip quotes/backslashes AND the whole control range — a
           // message quoting binary data or ANSI escapes must not make
           // the one-line JSON unparseable
-          errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
-            .replaceAll("[\"\\\\\\x00-\\x1f]", " ").take(200)
-          (-1.0, 0, 0)
+          Left(Option(e.getMessage).getOrElse(e.getClass.getName)
+            .replaceAll("[\"\\\\\\x00-\\x1f]", " ").take(200))
       }
     }
+
+    def close(): Unit = spark.sparkContext.removeSparkListener(jobListener)
+  }
+
+  /** (/proc/loadavg's three averages, cumulative steal seconds) now —
+    * the quiet-host check around a pass; empty and 0 off Linux. */
+  private def hostSample(): (String, Double) = {
+    def read(f: String) = scala.util.Try(
+      new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(f)))).getOrElse("")
+    val load = read("/proc/loadavg").trim.split("\\s+").take(3).filter(_.nonEmpty)
+    // steal is the 8th value of /proc/stat's "cpu" line, in USER_HZ (100/s)
+    val steal = read("/proc/stat").linesIterator.find(_.startsWith("cpu "))
+      .flatMap(_.trim.split("\\s+").lift(8)).map(_.toLong / 100.0).getOrElse(0.0)
+    (load.mkString("[", ",", "]"), steal)
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = BenchSession.sfDir
+    val spark = BenchSession.create()
+    val runner = new Runner(spark, sfDir)
+    val selected = BenchSession.select(args.toSeq)
     // two full passes: every query sampled once per pass, min across
     // passes — the samples of one query are decorrelated by the rest of
     // the suite running between them.  A query that succeeds in either
@@ -103,40 +167,45 @@ object Bench {
     // progress line per query per pass: early stdout (cut by the
     // driver's tail capture — that's fine), but a hung or crashed run
     // leaves the last attempted query on record
-    def runPass(pass: String): Map[String, (Double, Int, Int)] =
-      selected.map { case (name, fn) =>
-        val r = runOnce(name, fn)
-        println(s"""{"pass":"$pass","q":"$name","sec":${r._1}}""")
+    def runPass(pass: String): (Map[String, Either[String, Run]], String) = {
+      val (load0, steal0) = hostSample()
+      val runs = selected.map { case (name, fn) =>
+        val r = runner.runOnce(fn)
+        println(s"""{"pass":"$pass","q":"$name","sec":${r.fold(_ => -1.0, _.sec)}}""")
         name -> r
       }.toMap
-    val passA = runPass("A")
-    val passB = runPass("B")
-    val results = selected.map { case (name, _) =>
-      val a = passA(name)
-      val b = passB(name)
-      val best =
-        if (a._1 < 0 && b._1 < 0) a // failed both passes — error stands
-        else if (a._1 < 0) { errors.remove(name); b }
-        else if (b._1 < 0) { errors.remove(name); a }
-        else if (b._1 < a._1) b
-        else a
-      name -> best
+      val (load1, steal1) = hostSample()
+      (runs, s""""$pass":{"loadavg_before":$load0,"loadavg_after":$load1,"steal_s":${steal1 - steal0}}""")
     }
-    val qs = results.map { case (k, (sec, _, _)) => "\"" + k + "\":" + sec }
+    val (passA, hostA) = runPass("A")
+    val (passB, hostB) = runPass("B")
+    // failed both passes: pass B's error stands
+    val results = selected.map { case (name, _) =>
+      name -> ((passA(name), passB(name)) match {
+        case (Right(a), Right(b)) => Right(if (b.sec < a.sec) b else a)
+        case (a @ Right(_), _)    => a
+        case (_, b)               => b
+      })
+    }
+    val failed = Run(-1.0, 0, 0, 0.0, 0.0, 0)
+    val kept = results.map { case (k, r) => (k, r.getOrElse(failed)) }
+    val qs = kept.map { case (k, r) => "\"" + k + "\":" + r.sec }
       .mkString("{", ",", "}")
-    // per-query job/stage profile of the kept (min) run, alongside the
-    // plain numeric "queries" map so existing consumers keep parsing
-    val profiles = results.map { case (k, (sec, jobs, stages)) =>
-      "\"" + k + "\":{\"sec\":" + sec + ",\"jobs\":" + jobs + ",\"stages\":" + stages + "}"
-    }.mkString("{", ",", "}")
+    // per-query job/stage/layer profile of the kept (min) run, alongside
+    // the plain numeric "queries" map so existing consumers keep parsing
+    val profiles = kept.map { case (k, r) => "\"" + k + "\":" + r.json }
+      .mkString("{", ",", "}")
+    val errors = results.collect { case (k, Left(msg)) => (k, msg) }
     val errJson = errors.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
       .mkString("{", ",", "}")
-    val total = results.collect { case (_, (v, _, _)) if v >= 0 => v }.sum
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"profiles":$profiles,"errors":$errJson,"sf":"$sfDir"}""")
+    val host = s"""{"cpus":${spark.sparkContext.defaultParallelism},$hostA,$hostB}"""
+    val total = kept.collect { case (_, r) if r.sec >= 0 => r.sec }.sum
+    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"profiles":$profiles,"errors":$errJson,"host":$host,"sf":"$sfDir"}""")
     // tail-safe lines (see tailLines): jobs (sacrificial, cut first),
     // then the COMPLETE compact seconds map, then the totals-only line
-    Bench.tailLines(results.map { case (k, (sec, jobs, _)) => (k, sec, jobs) },
+    Bench.tailLines(kept.map { case (k, r) => (k, r.sec, r.jobs) },
       errors.size, sfDir).foreach(println)
+    runner.close()
     spark.stop()
     if (errors.nonEmpty) sys.exit(1)
   }

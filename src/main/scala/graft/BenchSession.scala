@@ -3,13 +3,14 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The one session every `SparkEntry.queries`-driving main runs in —
-  * Bench, Verify, and the tools PlanDump, OverheadProbe, ABProbe and
-  * StreamProbe — plus the helpers they share.  Tuned for the local
+  * Bench, Verify and the tool PlanDump — plus the helpers they share.
+  * Bench is the one main that times slots and splits them into build,
+  * plan and exec (its `Runner`).  Tuned for the local
   * harness: `local[$SPARK_GRAFT_CPUS]` (default 32), shuffle
   * partitions = cores, AQE with partition coalescing, UTC, no UI, the
   * graft extensions; warmed with a trivial action so the first query
-  * doesn't absorb JVM/session startup.  A plan dumped or a probe timed
-  * here is therefore the plan the bench runs. */
+  * doesn't absorb JVM/session startup.  A plan dumped here is therefore
+  * the plan the bench runs. */
 object BenchSession {
 
   /** Directory of the corpus tables the mains read. */

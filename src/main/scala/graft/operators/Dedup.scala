@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.core.Jobs.describing
 
 /** Deduplication operators for training-data pipelines (beyond-reference
   * extension, SURVEY.md §7.2 M6).  All variants are shuffle-on-key
@@ -952,12 +953,6 @@ object Dedup {
         col("n_docs"), col("n_occurrences"), col("first_doc"))
   }
 
-  /** Diagnostic only (ScaleRehearsal `cc` mode): rounds the last
-    * connectedComponents call took on this JVM — 0 when the driver
-    * tier answered, the distributed pointer-jump round count
-    * otherwise, −1 before any call.  Not part of any query contract. */
-  @volatile private[graft] var lastCcRounds: Int = -1
-
   /** Connected components of the near-dup pair graph by iterative
     * min-label propagation: every node starts labeled with its own id;
     * each round a node takes the minimum label among itself and its
@@ -1019,7 +1014,10 @@ object Dedup {
     * graph exceeds the bound (billions of near-dup pairs at 100 TB)
     * falls through to the distributed loop automatically.  Both tiers
     * compute the identical labeling (spec-pinned against each other);
-    * `driverPairLimit = 0` forces the distributed loop.
+    * `driverPairLimit = 0` forces the distributed loop.  Each
+    * distributed round runs its jobs under the description
+    * `connectedComponents round <i>` (i from 1), so a listener counts
+    * the rounds a call took; the driver tier runs no round.
     *
     * @param nodes  one row per corpus id (extra columns ignored)
     * @param idCol  id column name in `nodes`
@@ -1056,7 +1054,6 @@ object Dedup {
     if (driverOrderable && driverPairLimit > 0) {
       val sample = collectPairsIfSmall(p0, driverPairLimit)
       sample.foreach { rows =>
-        lastCcRounds = 0
         try return driverComponents(nodes, idCol, rows, idTypes.head)
         finally p0.unpersist(blocking = false)
       }
@@ -1141,7 +1138,9 @@ object Dedup {
         val jumped = ckpt(jumped0, eager = false)
         // exact fixpoint probe on the checkpointed frame: labels only
         // decrease, so "no change this round" IS the global fixpoint
-        converged = jumped.filter(col("c3") =!= col("comp")).limit(1).count() == 0L
+        converged = describing(nodes.sparkSession, s"connectedComponents round ${iter + 1}") {
+          jumped.filter(col("c3") =!= col("comp")).limit(1).count() == 0L
+        }
         // this round is materialized -> the previous round's blocks
         // are unreachable from here on; free them now, not at GC time
         freeBlocks(prevRound)
@@ -1157,7 +1156,6 @@ object Dedup {
         throw new IllegalStateException(
           s"connectedComponents did not converge within maxIter=$maxIter rounds; " +
             "raise maxIter (rounds needed ~ log2 of the graph diameter)")
-      lastCcRounds = iter
       labels.select(col("node"), col("comp").as("component"))
     } finally { edges.unpersist(); p0.unpersist(); () }
   }

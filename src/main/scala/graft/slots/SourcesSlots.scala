@@ -99,8 +99,7 @@ object SourcesSlots {
       // write+compact cost flat at any corpus scale — the file-count
       // ECONOMICS are measured unbounded in ScaleRehearsal `files`
       val li = t(s, dir, "lineitem").df.filter(col("l_orderkey") < 30000)
-      val base = new java.io.File(
-        System.getProperty("java.io.tmpdir"), "graft_q126").getAbsolutePath
+      val base = scratchDir("q126_compact")
       // hash-on-key, not round-robin: a keyless repartition(n) first
       // SORTS its input within partitions (SPARK-23207 retry
       // determinism); the hash spread gives the same 64 tiny files —
@@ -130,12 +129,9 @@ object SourcesSlots {
         |FROM documents WHERE doc_id < 2500 GROUP BY 1""".stripMargin.replace("\n", " "))((s, dir) => {
       val d = t(s, dir, "documents").df.filter(col("doc_id") < 2500)
         .select(col("doc_id"), col("text"))
-      val base = new java.io.File(
-        System.getProperty("java.io.tmpdir"), "graft_q128").getAbsolutePath
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(base))
+      // a fresh store per build: the bench builds every slot twice
+      val base = scratchDir("q128_store")
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
       sources.ManifestStore.commitAppend(s, base,
         d.filter(col("doc_id") % 2 === 0).repartition(8), "even")
       sources.ManifestStore.commitAppend(s, base,

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructType}
+import graft.core.Jobs.describing
 
 /** Atomic, versioned table commits for the incremental ingest stores
   * (the span evidence of q122, the sketch columns of q118–q120, the
@@ -708,15 +709,6 @@ object ManifestStore {
     val rewriter = new ParquetRewriter(
       new RewriteOptions.Builder(conf, inputs.map(new Path(_)).asJava, out).build())
     try rewriter.processBlocks() finally rewriter.close()
-  }
-
-  /** Runs `body` with its jobs described as `what`, restoring the
-    * caller's description after. */
-  private def describing[T](spark: SparkSession, what: String)(body: => T): T = {
-    val sc = spark.sparkContext
-    val saved = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(what)
-    try body finally sc.setJobDescription(saved)
   }
 
   /** Exactly-once streaming sink step: commit one micro-batch,

@@ -507,22 +507,34 @@ object ScaleRehearsal {
   }
 
   /** Wall seconds (min-of-2) + shuffle-write bytes (second run) for a
-    * thunk — the two numbers a scale claim needs.  The listener bus is
-    * async, so bytes are read after the counter holds still. */
+    * thunk — the two numbers a scale claim needs — plus the job
+    * descriptions the last metered thunk ran under.  The listener bus
+    * is async, so bytes are read after the counter holds still. */
   private class Meter(spark: SparkSession) {
     private val bytes = new java.util.concurrent.atomic.AtomicLong(0)
+    private val descriptions = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
       override def onStageCompleted(
           e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
         bytes.addAndGet(e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten); ()
       }
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .foreach(descriptions.add)
     })
+    /** Distinct job descriptions starting with `prefix` seen while the
+      * last `apply` ran. */
+    def described(prefix: String): Int = {
+      import scala.jdk.CollectionConverters._
+      descriptions.asScala.count(_.startsWith(prefix))
+    }
     private def drained(): Long = {
       var last = -1L; var spins = 0
       while (spins < 50 && last != bytes.get) { last = bytes.get; Thread.sleep(20); spins += 1 }
       bytes.get
     }
     def apply(body: => Unit): (Double, Long) = {
+      descriptions.clear()
       def once(): (Double, Long) = {
         val b0 = drained(); val t0 = System.nanoTime
         body
@@ -705,7 +717,7 @@ object ScaleRehearsal {
         comps = graft.operators.Dedup.connectedComponents(nodes, "id", pairs)
           .select(col("component")).distinct().count()
       }
-      val rounds = graft.operators.Dedup.lastCcRounds
+      val rounds = meter.described("connectedComponents round ")
       require(rounds > 0, s"$name: driver tier answered — rehearsal must engage the distributed loop")
       println(f"$name%-12s ${pairs.count()}%10d $comps%10d $rounds%6d $t%8.2f ${b / 1e6}%10.1f")
       (t, b)
