@@ -2,17 +2,15 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo}
-import org.apache.spark.sql.types.DoubleType
-import graft.functions.HealpixAng2Pix
 
 /** SparkSessionExtensions entry point: install the engine's custom
   * Catalyst surface into any session via
   * `spark.sql.extensions=graft.GraftExtensions` (or
   * `.withExtensions(new GraftExtensions)`).
   *
-  * Registers `healpix_ang2pix(order, lon_deg, lat_deg)` and
-  * `sphdist(ra1, dec1, ra2, dec2)` — the two scalars the reference
+  * Registers the [[graft.functions.SqlScalars]] table — among them
+  * `healpix_ang2pix(order, lon_deg, lat_deg)` and
+  * `sphdist(ra1, dec1, ra2, dec2)`, the two scalars the reference
   * needs that Spark lacks as builtins (SURVEY.md §4.3) — plus the
   * [[graft.plans.ConeZonePushdown]] optimizer rule, which turns
   * `sphdist(…) ≤ r` cone filters into sargable zone pre-filters.
@@ -27,38 +25,8 @@ import graft.functions.HealpixAng2Pix
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => graft.plans.ConeZonePushdown)
-    ext.injectFunction((
-      new FunctionIdentifier("sphdist"),
-      new ExpressionInfo(classOf[graft.functions.SphDistExpr].getName, "sphdist"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 4, "sphdist(ra1_deg, dec1_deg, ra2_deg, dec2_deg)")
-        graft.functions.SphDistExpr(
-          Cast(exprs(0), DoubleType), Cast(exprs(1), DoubleType),
-          Cast(exprs(2), DoubleType), Cast(exprs(3), DoubleType))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("healpix_ang2pix"),
-      new ExpressionInfo(classOf[HealpixAng2Pix].getName, "healpix_ang2pix"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 3, "healpix_ang2pix(order, lon_deg, lat_deg)")
-        val order = exprs.head.eval(null) match {
-          case i: Int => i
-          case l: Long => l.toInt
-          case other => throw new IllegalArgumentException(s"order must be a literal int, got $other")
-        }
-        HealpixAng2Pix(order, Cast(exprs(1), DoubleType), Cast(exprs(2), DoubleType))
-      }))
-    // Compositional scalars (sexagesimal converters, gaia_healpix):
-    // one shared definition table with the live-session registrar, so
-    // the raw-SQL surface can never drift from the Column API.
-    graft.functions.SqlScalars.all.foreach { case (name, arity, usage, f) =>
-      ext.injectFunction((
-        new FunctionIdentifier(name),
-        // 5-arg (className, db, name, usage, extended): the 3-arg form
-        // is (className, db, name) — passing (className, name, usage)
-        // there registered the usage string as the function NAME
-        new ExpressionInfo("graft.functions.Astro", null, name, usage, ""),
-        graft.functions.SqlScalars.builder(arity, usage, f)))
+    graft.functions.SqlScalars.all.foreach { f =>
+      ext.injectFunction((new FunctionIdentifier(f.name), f.info, f.builder))
     }
   }
 }

@@ -23,33 +23,54 @@ object SparkEntry {
   private[graft] def t(s: SparkSession, dir: String, name: String): EzFrame =
     EzFrame.readParquet(s, s"$dir/$name.parquet")
 
-  /** Deterministic fan-out keys per corpus table (primary key — unique,
-    * so the hash spread is even; see [[graft.sources.FanOut]]). */
+  /** Deterministic fan-out keys per corpus table that a [[tfan]] slot
+    * reads (primary key — unique, so the hash spread is even). */
   private val fanKeys: Map[String, Seq[String]] = Map(
     "lineitem" -> Seq("l_orderkey", "l_linenumber"),
-    "orders" -> Seq("o_orderkey"),
-    "customer" -> Seq("c_custkey"),
-    "supplier" -> Seq("s_suppkey"),
-    "part" -> Seq("p_partkey"),
     "documents" -> Seq("doc_id"),
     "embeddings" -> Seq("vec_id"))
 
-  /** [[t]] + scale-adaptive fan-out: the bench corpora are single-file
+  /** On-disk size at or below which [[tfan]] fans a table out.  Above
+    * it the input is big enough to arrive as many native splits
+    * (files or row groups), so the fan-out adds nothing to the plan. */
+  private[graft] val FanOutMaxBytes: Long = 256L << 20
+
+  /** [[t]] + fan-out: the bench corpora are single-file
     * single-row-group parquet, so a bare scan feeds the whole table
-    * through ONE task; for queries whose first stage carries real
+    * through ONE task.  For slots whose first stage carries real
     * per-row compute (text/astro/vector kernels, partial aggregates)
-    * this spreads the rows across the session's cores with one
-    * deterministic hash exchange.  No-op above
-    * `spark.graft.fanout.maxBytes` — at production scale the files
-    * themselves provide the parallelism.  See [[graft.sources.FanOut]]. */
+    * a table of at most [[FanOutMaxBytes]] gets one deterministic hash
+    * repartition on its `fanKeys` to `defaultParallelism` partitions
+    * right after the read:
+    *
+    *  - Catalyst prunes columns through the exchange, so the shuffle
+    *    moves only the columns the query reads.
+    *  - Hash-on-key (not round-robin) keeps the row→partition mapping
+    *    deterministic under task retry.
+    *  - The explicit partition count makes the exchange
+    *    REPARTITION_BY_NUM, which AQE's coalescing leaves alone.
+    *
+    * A larger table passes through untouched. */
   private[graft] def tfan(s: SparkSession, dir: String, name: String): EzFrame = {
     val ez = t(s, dir, name)
     val keys = fanKeys.getOrElse(name, sys.error(
       s"no fan-out keys declared for table '$name' — add it to SparkEntry.fanKeys"))
       .map(ez.df(_))
-    new EzFrame(
-      graft.sources.FanOut.small(ez.df, s"$dir/$name.parquet", keys), ez.meta)
+    new EzFrame(fanOut(ez.df, keys, onDiskBytes(s, s"$dir/$name.parquet")), ez.meta)
   }
+
+  /** Bytes under `path`, through the session's Hadoop conf; a missing
+    * or unreadable path throws the filesystem's error, which names it. */
+  private[graft] def onDiskBytes(s: SparkSession, path: String): Long = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(s.sparkContext.hadoopConfiguration).getContentSummary(p).getLength
+  }
+
+  /** The fan-out decision for a table of `bytes` on disk. */
+  private[graft] def fanOut(df: DataFrame, keys: Seq[Column], bytes: Long): DataFrame =
+    if (bytes <= FanOutMaxBytes)
+      df.repartition(df.sparkSession.sparkContext.defaultParallelism, keys: _*)
+    else df
 
   /** Write-then-read slots' scratch space: one fresh temp dir per
     * (tag, JVM) — reused across the bench's two passes via overwrite;

@@ -188,22 +188,6 @@ object Healpix {
     }
     out.result()
   }
-
-  /** Register `healpix_ang2pix(order, lon, lat)` for SQL use. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "healpix_ang2pix",
-      exprs => {
-        require(exprs.length == 3, "healpix_ang2pix(order, lon_deg, lat_deg)")
-        val order = exprs.head.eval(null) match {
-          case i: Int => i
-          case l: Long => l.toInt
-          case other => throw new IllegalArgumentException(s"order must be a literal int, got $other")
-        }
-        import org.apache.spark.sql.catalyst.expressions.Cast
-        HealpixAng2Pix(order, Cast(exprs(1), DoubleType), Cast(exprs(2), DoubleType))
-      },
-      "scala_udf")
 }
 
 /** Codegen-friendly nested ang2pix over (lonDeg, latDeg). */

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, QuaternaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, QuaternaryExpression}
 import org.apache.spark.sql.catalyst.trees.QuaternaryLike
 import org.apache.spark.sql.types.{DataType, DoubleType}
 
@@ -47,18 +47,6 @@ object SphDist {
       GraftBridge.expression(dec1.cast(DoubleType)),
       GraftBridge.expression(ra2.cast(DoubleType)),
       GraftBridge.expression(dec2.cast(DoubleType))))
-
-  /** Register `sphdist(ra1, dec1, ra2, dec2)` for SQL use on an
-    * existing session (the config-free twin of [[graft.GraftExtensions]]). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sphdist",
-      exprs => {
-        require(exprs.length == 4, "sphdist(ra1_deg, dec1_deg, ra2_deg, dec2_deg)")
-        SphDistExpr(Cast(exprs(0), DoubleType), Cast(exprs(1), DoubleType),
-          Cast(exprs(2), DoubleType), Cast(exprs(3), DoubleType))
-      },
-      "scala_udf")
 }
 
 /** Codegen-friendly haversine over four double children (degrees). */

@@ -250,7 +250,7 @@ object AstroSlots {
          |CAST((l_partkey % 181) - 90 AS DOUBLE) AS dec FROM lineitem)
          |SELECT l_orderkey, l_partkey, ra, dec, round($sphdist107Sql, 6) AS sep
          |FROM c WHERE $sphdist107Sql <= 33.7""".stripMargin.replace("\n", " "))((s, dir) => {
-      graft.functions.SphDist.register(s)
+      graft.functions.SqlScalars.register(s)
       graft.plans.ConeZonePushdown.install(s)
       t(s, dir, "lineitem").df
         .withColumn("ra", (col("l_orderkey") % 360).cast(DoubleType))

@@ -269,7 +269,7 @@ object CoreExprSlots {
         |max(l_extendedprice) - min(l_extendedprice) AS price_span
         |FROM lineitem GROUP BY l_returnflag""".stripMargin.replace("\n", " "))((s, dir) => {
       import org.apache.spark.sql.Row
-      val li = tfan(s, dir, "lineitem")
+      val li = t(s, dir, "lineitem")
         .select("l_returnflag l_quantity l_extendedprice")
       li.flatMapGroups("l_returnflag", StructType(Seq(
         StructField("l_returnflag", StringType),

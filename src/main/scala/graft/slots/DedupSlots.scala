@@ -130,7 +130,7 @@ object DedupSlots {
         |CAST(bit_count(xor(a.f, b.f)) AS INT) AS hamming
         |FROM banded a JOIN banded b ON a.band_key = b.band_key AND a.doc_id < b.doc_id
         |WHERE bit_count(xor(a.f, b.f)) <= 3""".stripMargin.replace("\n", " "))((s, dir) => {
-      val d = tfan(s, dir, "documents").df
+      val d = t(s, dir, "documents").df
       Dedup.simhashNearDup(d, col("text"), col("doc_id"), bands = 4, maxHamming = 3,
         portableHash = true)
     }),
@@ -286,7 +286,7 @@ object DedupSlots {
         |FROM pairs p JOIN lanes la ON la.doc_id = p.batch_id
         |JOIN lanes lb ON lb.doc_id = p.index_id AND lb.lane = la.lane
         |GROUP BY p.batch_id, p.index_id""".stripMargin.replace("\n", " "))((s, dir) => {
-      val d = tfan(s, dir, "documents").df
+      val d = t(s, dir, "documents").df
       val idx = Dedup.minhashBandIndex(d, col("text"), col("doc_id"), portableHash = true)
       Dedup.minhashLshAgainstIndex(
           d.filter(col("doc_id") % 10 === 0), col("text"), col("doc_id"), idx,

@@ -60,7 +60,7 @@ object SimilaritySlots {
         |row_number() OVER (PARTITION BY probe_id
         |ORDER BY cos_sim DESC, corpus_id) AS rank FROM scored)
         |SELECT probe_id, corpus_id, cos_sim, rank FROM r WHERE rank <= 5""".stripMargin.replace("\n", " "))((s, dir) => {
-      val e = tfan(s, dir, "embeddings").df
+      val e = t(s, dir, "embeddings").df
       Similarity.lshTopK(e, "vec_id", "embedding", 5, planes = 6)
     }),
 
@@ -291,7 +291,7 @@ object SimilaritySlots {
          |SELECT probe_id, corpus_id, round(sqrt(adc2), 6) AS adc_dist,
          |CAST(rank AS INT) AS rank FROM r WHERE rank <= 5""".stripMargin.replace("\n", " ")
     })((s, dir) => {
-      val e = tfan(s, dir, "embeddings").df
+      val e = t(s, dir, "embeddings").df
       val key = graft.functions.WindowHash.md5Prefix(col("vec_id").cast(StringType), 6)
       val cents = e.filter(col("embedding").isNotNull)
         .orderBy(key.asc, col("vec_id").asc).limit(4)

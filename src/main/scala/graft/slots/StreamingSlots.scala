@@ -142,12 +142,12 @@ object StreamingSlots {
         .option("maxFilesPerTrigger", "1").parquet(streamDir.getPath)
       // each trigger reads ONE file = one map task, so the portable
       // md5 signature kernel ran single-threaded per micro-batch; the
-      // same scale-adaptive fan-out as the batch slots spreads it (the
-      // stateful core re-shuffles by band bucket either way, and
-      // leader clustering sorts by doc_id within the batch, so the
+      // batch slots' fan-out spreads it (the three files are written
+      // above, always under SparkEntry.FanOutMaxBytes; the stateful
+      // core re-shuffles by band bucket either way, and leader
+      // clustering sorts by doc_id within the batch, so the
       // partitioning is invisible to the result)
-      val fanned = graft.sources.FanOut.small(stream, streamDir.getPath,
-        Seq(col("doc_id")))
+      val fanned = stream.repartition(s.sparkContext.defaultParallelism, col("doc_id"))
       val hits = graft.streaming.StreamingDedup.nearDupHitsPortable(
         fanned, "doc_id", "text", threshold = 0.5)
       val sink = "q59_sink_" + java.util.UUID.randomUUID().toString.replace("-", "")

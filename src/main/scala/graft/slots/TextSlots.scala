@@ -395,7 +395,7 @@ object TextSlots {
         |(SELECT cut FROM cut) AS cut
         |FROM dsz z LEFT JOIN sus s ON s.doc_id = z.doc_id
         |WHERE COALESCE(s.n_suspect, 0) >= (SELECT cut FROM cut)""".stripMargin.replace("\n", " "))((s, dir) => {
-      val d = tfan(s, dir, "documents").df
+      val d = t(s, dir, "documents").df
       val bench = d.filter(col("doc_id").isin(3L, 17L))
         .select((col("doc_id") + 100000L).as("bid"),
           substring(col("text"), 1, 80).as("btext"))

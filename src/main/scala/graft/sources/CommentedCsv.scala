@@ -167,18 +167,19 @@ object CommentedCsv {
     * final concat is IO-bound, not compute-bound. */
   def write(ez: EzFrame, path: String, delimiter: String = ","): Unit = {
     val tmp = java.nio.file.Files.createTempDirectory("graft_csv").toString
-    ez.df.coalesce(1).write.mode("overwrite")
-      .option("delimiter", delimiter)
-      .option("nullValue", "")
-      .csv(tmp)
-    val part = new java.io.File(tmp).listFiles().find(_.getName.startsWith("part-"))
-      .getOrElse(throw new IllegalStateException(s"no part file written under $tmp"))
-    val out = new java.io.BufferedOutputStream(new java.io.FileOutputStream(path))
     try {
-      out.write(generateHeader(ez, delimiter).getBytes("UTF-8"))
-      java.nio.file.Files.copy(part.toPath, out)
-    } finally out.close()
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
+      ez.df.coalesce(1).write.mode("overwrite")
+        .option("delimiter", delimiter)
+        .option("nullValue", "")
+        .csv(tmp)
+      val part = new java.io.File(tmp).listFiles().find(_.getName.startsWith("part-"))
+        .getOrElse(throw new IllegalStateException(s"no part file written under $tmp"))
+      val out = new java.io.BufferedOutputStream(new java.io.FileOutputStream(path))
+      try {
+        out.write(generateHeader(ez, delimiter).getBytes("UTF-8"))
+        java.nio.file.Files.copy(part.toPath, out)
+      } finally out.close()
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
   }
 
   /** LaTeX tabular emitter (ezdata/simpletable.py:792–844) — driver

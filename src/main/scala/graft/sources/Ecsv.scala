@@ -178,17 +178,18 @@ object Ecsv {
       }
     }
     val tmp = java.nio.file.Files.createTempDirectory("graft_ecsv").toString
-    serialized.coalesce(1).write.mode("overwrite")
-      .option("header", "true")
-      .option("nullValue", "")
-      .csv(tmp)
-    val part = new java.io.File(tmp).listFiles().find(_.getName.startsWith("part-"))
-      .getOrElse(throw new IllegalStateException(s"no part file written under $tmp"))
-    val out = new java.io.BufferedOutputStream(new java.io.FileOutputStream(path))
     try {
-      out.write(generateHeader(ez).getBytes("UTF-8"))
-      java.nio.file.Files.copy(part.toPath, out)
-    } finally out.close()
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
+      serialized.coalesce(1).write.mode("overwrite")
+        .option("header", "true")
+        .option("nullValue", "")
+        .csv(tmp)
+      val part = new java.io.File(tmp).listFiles().find(_.getName.startsWith("part-"))
+        .getOrElse(throw new IllegalStateException(s"no part file written under $tmp"))
+      val out = new java.io.BufferedOutputStream(new java.io.FileOutputStream(path))
+      try {
+        out.write(generateHeader(ez).getBytes("UTF-8"))
+        java.nio.file.Files.copy(part.toPath, out)
+      } finally out.close()
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
   }
 }

@@ -9,7 +9,7 @@ class ArrowIpcSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp(suffix: String = ".arrow"): String =
-    java.nio.file.Files.createTempFile("arrow_spec", suffix).toString
+    tempFile("arrow_spec", suffix).toString
 
   test("all supported types round-trip, nulls included") {
     val schema = StructType(Seq(

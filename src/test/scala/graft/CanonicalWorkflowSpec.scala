@@ -19,7 +19,7 @@ class CanonicalWorkflowSpec extends SparkSpec {
       (3.0, 3.65, 1.2, 3.5), // 10**3.65 = 4467 K -> too cool
       (4.0, 3.75, 1.8, 2.2)) // 5623 K, J>2 -> selected
       .toDF("M_ini", "logTe", "logL", "J")
-    val src = java.nio.file.Files.createTempFile("canon", ".csv").toString
+    val src = tempFile("canon", ".csv").toString
     CommentedCsv.write(
       EzFrame(phot).setHeader("NAME", "phot").setUnit("logTe", "dex(K)"), src)
 
@@ -32,7 +32,7 @@ class CanonicalWorkflowSpec extends SparkSpec {
     assert(math.abs(st("logTe") - 3.775) < 1e-9)
     assert(math.abs(st("logL") - 1.95) < 1e-9)
 
-    val out = java.nio.file.Files.createTempFile("canon_out", ".csv").toString
+    val out = tempFile("canon_out", ".csv").toString
     CommentedCsv.write(q, out)
     val back = CommentedCsv.read(spark, out)
     assert(back.count() == 2)

@@ -168,7 +168,7 @@ class ConeRuleSpec extends SparkSpec {
   }
 
   test("raw SQL text through the registered function gets the rewrite") {
-    SphDist.register(spark)
+    graft.functions.SqlScalars.register(spark)
     sky.createOrReplaceTempView("cone_rule_sky")
     val q = sql("""SELECT ra, dec FROM cone_rule_sky
                    WHERE sphdist(ra, dec, 180.0, 20.0) <= 15.0""")
@@ -232,13 +232,17 @@ class ConeRuleSpec extends SparkSpec {
     new GraftExtensions().apply(ext)
     val reg = new org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistry
     org.apache.spark.sql.GraftBridge.registerInjectedFunctions(ext, reg)
-    for (name <- Seq("hms2deg", "deg2hms", "gaia_healpix")) {
+    for (name <- Seq("hms2deg", "deg2hms", "gaia_healpix", "sphdist", "healpix_ang2pix")) {
       val info = reg.lookupFunction(new org.apache.spark.sql.catalyst.FunctionIdentifier(name))
         .getOrElse(fail(s"$name not registered"))
       assert(info.getName == name, s"name slot holds '${info.getName}'")
       assert(info.getDb == null || info.getDb.isEmpty, s"db slot holds '${info.getDb}'")
       assert(info.getUsage.contains(s"$name("), s"usage slot holds '${info.getUsage}'")
     }
+    def className(name: String) = reg.lookupFunction(
+      new org.apache.spark.sql.catalyst.FunctionIdentifier(name)).get.getClassName
+    assert(className("sphdist") == classOf[graft.functions.SphDistExpr].getName)
+    assert(className("healpix_ang2pix") == classOf[graft.functions.HealpixAng2Pix].getName)
   }
 
   test("SQL-text scalars match the Column API value for value") {

@@ -34,7 +34,7 @@ class DocExamplesSpec extends SparkSpec {
   }
 
   test("ECSV docstring example (ezdata/ecsv.py:32-41)") {
-    val path = java.nio.file.Files.createTempFile("doc_ecsv", ".ecsv").toString
+    val path = tempFile("doc_ecsv", ".ecsv").toString
     java.nio.file.Files.writeString(java.nio.file.Paths.get(path),
       """# %ECSV 1.0
         |# ---

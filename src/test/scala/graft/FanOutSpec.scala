@@ -1,58 +1,48 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.sources.FanOut
 
-/** The r21 scale-adaptive fan-out: small unsplittable inputs get ONE
-  * deterministic hash repartition to defaultParallelism; big inputs
-  * (or a disabled conf) pass through untouched.  The gate is the
-  * table's on-disk size, so at production scale the helper is a
-  * no-op by construction. */
+/** `SparkEntry.tfan` over a temp corpus dir: a table at most
+  * `FanOutMaxBytes` on disk gets ONE deterministic hash repartition to
+  * defaultParallelism; a bigger one passes through untouched; a table
+  * that cannot be sized fails loudly, naming its path. */
 class FanOutSpec extends SparkSpec {
 
-  private def writeTable(): String = {
-    val dir = java.nio.file.Files.createTempDirectory("fanout_spec").toString
-    spark.range(0, 1000).select(col("id"), (col("id") * 2).as("v"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/t.parquet")
-    s"$dir/t.parquet"
+  private lazy val corpus: String = {
+    val dir = tempDir("fanout_spec").toString
+    spark.range(0, 1000).select(col("id").as("doc_id"), (col("id") * 2).as("v"))
+      .coalesce(1).write.parquet(s"$dir/documents.parquet")
+    dir
   }
 
+  private def placement(df: org.apache.spark.sql.DataFrame): Map[Long, Int] =
+    df.withColumn("p", spark_partition_id()).select("doc_id", "p").collect()
+      .map(r => r.getLong(0) -> r.getInt(1)).toMap
+
   test("below the size threshold: repartitions to defaultParallelism, rows unchanged") {
-    val path = writeTable()
-    val df = spark.read.parquet(path)
-    val out = FanOut.small(df, path, Seq(col("id")))
+    val out = SparkEntry.tfan(spark, corpus, "documents").df
     assert(out.rdd.getNumPartitions == spark.sparkContext.defaultParallelism)
     assert(out.count() == 1000L)
     // pure exchange, and the row->partition map is deterministic (hash
     // on the key): two independent invocations place every row the
     // same way — the task-retry safety the round-robin form lacks
-    val a = out.withColumn("p", spark_partition_id()).select("id", "p").collect()
-      .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val b = FanOut.small(spark.read.parquet(path), path, Seq(col("id")))
-      .withColumn("p", spark_partition_id()).select("id", "p").collect()
-      .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    assert(a == b, "hash fan-out must be deterministic under re-execution")
+    assert(placement(out) == placement(SparkEntry.tfan(spark, corpus, "documents").df),
+      "hash fan-out must be deterministic under re-execution")
   }
 
-  test("above the threshold (or sized-unreadable path): no-op") {
-    val path = writeTable()
-    val df = spark.read.parquet(path)
-    withSQLConf(FanOut.MaxBytesConf -> "1") { // table is bigger than 1 byte
-      val out = FanOut.small(df, path, Seq(col("id")))
-      assert(out.queryExecution.logical eq df.queryExecution.logical,
-        "above maxBytes the frame must pass through untouched")
-    }
-    // unreadable path -> sized as Long.MaxValue -> no-op, never a throw
-    val out2 = FanOut.small(df, "/nonexistent/nowhere.parquet", Seq(col("id")))
-    assert(out2.queryExecution.logical eq df.queryExecution.logical)
+  test("at the bound the frame fans out, above it the frame passes through untouched") {
+    val df = spark.read.parquet(s"$corpus/documents.parquet")
+    val keys = Seq(df("doc_id"))
+    assert(SparkEntry.fanOut(df, keys, SparkEntry.FanOutMaxBytes)
+      .rdd.getNumPartitions == spark.sparkContext.defaultParallelism)
+    val out = SparkEntry.fanOut(df, keys, SparkEntry.FanOutMaxBytes + 1)
+    assert(out.queryExecution.logical eq df.queryExecution.logical,
+      "above the bound the frame must pass through untouched")
   }
 
-  test("maxBytes <= 0 disables fan-out") {
-    val path = writeTable()
-    val df = spark.read.parquet(path)
-    withSQLConf(FanOut.MaxBytesConf -> "0") {
-      assert(FanOut.small(df, path, Seq(col("id")))
-        .queryExecution.logical eq df.queryExecution.logical)
-    }
+  test("a table that cannot be sized throws and names its path") {
+    val missing = s"$corpus/nowhere.parquet"
+    val e = intercept[java.io.IOException](SparkEntry.onDiskBytes(spark, missing))
+    assert(e.getMessage.contains(missing), e.getMessage)
   }
 }

@@ -9,7 +9,7 @@ class FitsSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp(): String =
-    java.nio.file.Files.createTempFile("graft_fits", ".fits").toString
+    tempFile("graft_fits", ".fits").toString
 
   test("binary-table round trip: types, values, units, header") {
     val df = Seq(
@@ -84,7 +84,7 @@ class FitsSpec extends SparkSpec {
   }
 
   test("append to a missing file creates it (primary + table)") {
-    val path = java.nio.file.Files.createTempDirectory("graft_fits").resolve("new.fits").toString
+    val path = tempDir("graft_fits").resolve("new.fits").toString
     Fits.append(EzFrame(Seq((1L, 2.0)).toDF("a", "b")), path)
     val back = Fits.read(spark, path)
     assert(back.count() == 1 && back.columns == Seq("a", "b"))

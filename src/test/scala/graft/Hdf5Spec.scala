@@ -18,7 +18,7 @@ class Hdf5Spec extends SparkSpec {
   import spark.implicits._
 
   private def tmp(): String =
-    java.nio.file.Files.createTempFile("graft_h5", ".h5").toString
+    tempFile("graft_h5", ".h5").toString
 
   test("compound round trip: types and values") {
     val df = Seq(

@@ -5,11 +5,22 @@ import org.apache.spark.sql.types._
 import graft.core.EzFrame
 import graft.sources.{CommentedCsv, Ecsv}
 
+object IoSpec {
+  /** Staging dirs `prefix*` in the JVM temp dir, made during `body`. */
+  def newStagingDirs(prefix: String)(body: => Unit): Set[String] = {
+    def list() = Option(new java.io.File(System.getProperty("java.io.tmpdir"))
+      .list()).getOrElse(Array.empty[String]).filter(_.startsWith(prefix)).toSet
+    val before = list()
+    body
+    list() -- before
+  }
+}
+
 class CommentedCsvSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmpFile(suffix: String): String =
-    java.nio.file.Files.createTempFile("graft_io", suffix).toString
+    tempFile("graft_io", suffix).toString
 
   test("commented-header round trip: header, units, aliases, names, data") {
     val path = tmpFile(".csv")
@@ -65,6 +76,15 @@ class CommentedCsvSpec extends SparkSpec {
     assert(ez.where("mass > 2").count() == 2)
   }
 
+  test("a failed write throws and removes its staging dir") {
+    val ez = EzFrame(Seq((1.0, "x")).toDF("v", "s"))
+    val dest = tempDir("graft_io").resolve("missing/out.csv").toString
+    val leaked = IoSpec.newStagingDirs("graft_csv") {
+      intercept[java.io.IOException](CommentedCsv.write(ez, dest))
+    }
+    assert(leaked.isEmpty, s"staging dirs left behind: $leaked")
+  }
+
   test("latex emitter produces a tabular") {
     val ez = EzFrame(Seq((1.0, "x")).toDF("v", "s"))
     val tex = CommentedCsv.toLatex(ez)
@@ -78,7 +98,7 @@ class EcsvSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmpFile(suffix: String): String =
-    java.nio.file.Files.createTempFile("graft_io", suffix).toString
+    tempFile("graft_io", suffix).toString
 
   test("read typed header incl. array subtype (masked null elements)") {
     val path = tmpFile(".ecsv")
@@ -118,13 +138,22 @@ class EcsvSpec extends SparkSpec {
     assert(back.df.orderBy("id").select("vec").collect().map(_.getSeq[Double](0)).toSeq ==
       Seq(Seq(1.0, 2.0), Seq(3.0, 4.0)))
   }
+
+  test("a failed write throws and removes its staging dir") {
+    val ez = EzFrame(Seq((1L, Seq(1.0))).toDF("id", "vec"))
+    val dest = tempDir("graft_io").resolve("missing/out.ecsv").toString
+    val leaked = IoSpec.newStagingDirs("graft_ecsv") {
+      intercept[java.io.IOException](Ecsv.write(ez, dest))
+    }
+    assert(leaked.isEmpty, s"staging dirs left behind: $leaked")
+  }
 }
 
 class ParquetMetaSpec extends SparkSpec {
   import spark.implicits._
 
   test("parquet round trip preserves header, aliases, units") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pq").toString + "/t.parquet"
+    val dir = tempDir("graft_pq").toString + "/t.parquet"
     val ez = EzFrame(Seq((1.0, 2.0)).toDF("x", "y"))
       .setAlias("ex", "x").setUnit("x", "deg").setComment("y", "ordinate")
       .setHeader("NAME", "ptable")
@@ -148,7 +177,7 @@ class IoDispatchSpec extends SparkSpec {
 
   test("dispatch round-trips csv, ecsv, fits, hd5 on extension") {
     for (ext <- Seq("csv", "ecsv", "fits", "hd5")) {
-      val p = java.nio.file.Files.createTempFile("graft_io", s".$ext").toString
+      val p = tempFile("graft_io", s".$ext").toString
       Io.write(EzFrame(df), p)
       val back = Io.read(spark, p).df.orderBy("id").collect()
       // text formats may narrow inferred integer types; values must hold
@@ -164,7 +193,7 @@ class IoDispatchSpec extends SparkSpec {
 
   test("write(append = true) dispatches to FITS append; rejects other formats") {
     import spark.implicits._
-    val p = java.nio.file.Files.createTempDirectory("graft_io").resolve("t.fits").toString
+    val p = tempDir("graft_io").resolve("t.fits").toString
     Io.write(EzFrame(Seq((1L, "a")).toDF("id", "s")), p)
     Io.write(EzFrame(Seq((2.5, 3.5)).toDF("x", "y")), p, append = true)
     assert(graft.sources.Fits.read(spark, p, hdu = 2).columns == Seq("x", "y"))

@@ -489,7 +489,7 @@ class PlanSpec extends SparkSpec {
     try {
       ev.repartition(4, col("user_id"))
         .write.bucketBy(4, "user_id").sortBy("user_id", "ts")
-        .option("path", java.nio.file.Files.createTempDirectory("graft_twin").toString)
+        .option("path", tempDir("graft_twin").toString)
         .saveAsTable(tbl)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("user_id")).orderBy(col("ts"))

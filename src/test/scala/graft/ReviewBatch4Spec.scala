@@ -197,7 +197,7 @@ class ReviewBatch4Spec extends SparkSpec {
   test("ECSV/VOTable readers fail loudly on malformed headers") {
     import graft.sources.{Ecsv, VoTable}
     def tmp(content: String): String = {
-      val f = java.nio.file.Files.createTempFile("graft_bad", ".txt")
+      val f = tempFile("graft_bad", ".txt")
       java.nio.file.Files.write(f, content.getBytes("UTF-8"))
       f.toString
     }

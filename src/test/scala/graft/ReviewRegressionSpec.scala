@@ -9,7 +9,7 @@ class ReviewRegressionSpec extends SparkSpec {
   import spark.implicits._
 
   test("parquet meta round-trips header values containing spaces") {
-    val dir = java.nio.file.Files.createTempDirectory("rr_pq").toString + "/t.parquet"
+    val dir = tempDir("rr_pq").toString + "/t.parquet"
     val ez = EzFrame(Seq((1.0, 2.0)).toDF("x", "y"))
       .setHeader("TITLE", "My Grand Survey").setAlias("ex", "x")
     EzFrame.writeParquet(ez, dir)
@@ -19,7 +19,7 @@ class ReviewRegressionSpec extends SparkSpec {
   }
 
   test("FITS quoted values containing '/' survive (units like km/s)") {
-    val path = java.nio.file.Files.createTempFile("rr_fits", ".fits").toString
+    val path = tempFile("rr_fits", ".fits").toString
     val ez = EzFrame(Seq((1.0, 2.0)).toDF("v", "w")).setUnit("v", "km/s")
     Fits.write(ez, path)
     val back = Fits.read(spark, path)
@@ -27,7 +27,7 @@ class ReviewRegressionSpec extends SparkSpec {
   }
 
   test("TSV write -> readTsv keeps column names") {
-    val path = java.nio.file.Files.createTempFile("rr_tsv", ".tsv").toString
+    val path = tempFile("rr_tsv", ".tsv").toString
     val ez = EzFrame(Seq((1.0, 2.0, 3.0)).toDF("alpha", "beta", "gamma"))
     CommentedCsv.write(ez, path, delimiter = "\t")
     val back = CommentedCsv.readTsv(spark, path)

@@ -379,7 +379,7 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("multi-file glob scan unions transparently") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_glob").toString
+    val dir = tempDir("graft_glob").toString
     spark.range(10).write.parquet(s"$dir/part1.parquet")
     spark.range(5).write.parquet(s"$dir/part2.parquet")
     val n = spark.read.parquet(s"$dir/part*.parquet").count()

@@ -13,6 +13,16 @@ object SparkSpec {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
+
+  /** One temp root per test JVM, removed on exit (the
+    * `SparkEntry.scratchDir` pattern): files and dirs made through
+    * [[SparkSpec.tempFile]]/[[SparkSpec.tempDir]] never outlive the run. */
+  lazy val tempRoot: java.nio.file.Path = {
+    val d = java.nio.file.Files.createTempDirectory("graft_spec")
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      org.apache.commons.io.FileUtils.deleteQuietly(d.toFile): Unit))
+    d
+  }
 }
 
 abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
@@ -22,6 +32,11 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     s
   }
   def sql(q: String): DataFrame = spark.sql(q)
+
+  def tempFile(prefix: String, suffix: String): java.nio.file.Path =
+    java.nio.file.Files.createTempFile(SparkSpec.tempRoot, prefix, suffix)
+  def tempDir(prefix: String): java.nio.file.Path =
+    java.nio.file.Files.createTempDirectory(SparkSpec.tempRoot, prefix)
 
   /** Run `body` with SQL confs overridden, restoring prior values
     * (shared session — leaks would poison later suites). */

@@ -126,7 +126,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("file-source stream end to end: parquet dir -> windowed agg -> sink") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream").toString
+    val dir = tempDir("graft_stream").toString
     val batch = Seq((ts(1), "a", 1.0), (ts(5), "a", 2.0), (ts(16), "b", 5.0))
       .toDF("ts", "event_type", "value")
     batch.write.mode("overwrite").parquet(s"$dir/in")
@@ -334,7 +334,7 @@ class HealpixSpec extends SparkSpec {
   }
 
   test("SQL registration works") {
-    Healpix.register(spark)
+    graft.functions.SqlScalars.register(spark)
     val r = spark.sql("SELECT healpix_ang2pix(0, 45.0, 80.0) AS p").collect().head.getLong(0)
     assert(r == 0L)
   }

@@ -12,7 +12,7 @@ class WriterFuzzSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp(): String =
-    java.nio.file.Files.createTempFile("fuzz", ".bin").toString
+    tempFile("fuzz", ".bin").toString
 
   private val rnd = new scala.util.Random(1234)
 
