@@ -33,13 +33,13 @@ object SparkEntry {
   /** On-disk size at or below which [[tfan]] fans a table out.  Above
     * it the input is big enough to arrive as many native splits
     * (files or row groups), so the fan-out adds nothing to the plan. */
-  private[graft] val FanOutMaxBytes: Long = 256L << 20
+  private[graft] val FanMaxBytes: Long = 256L << 20
 
   /** [[t]] + fan-out: the bench corpora are single-file
     * single-row-group parquet, so a bare scan feeds the whole table
     * through ONE task.  For slots whose first stage carries real
     * per-row compute (text/astro/vector kernels, partial aggregates)
-    * a table of at most [[FanOutMaxBytes]] gets one deterministic hash
+    * a table of at most [[FanMaxBytes]] gets one deterministic hash
     * repartition on its `fanKeys` to `defaultParallelism` partitions
     * right after the read:
     *
@@ -68,7 +68,7 @@ object SparkEntry {
 
   /** The fan-out decision for a table of `bytes` on disk. */
   private[graft] def fanOut(df: DataFrame, keys: Seq[Column], bytes: Long): DataFrame =
-    if (bytes <= FanOutMaxBytes)
+    if (bytes <= FanMaxBytes)
       df.repartition(df.sparkSession.sparkContext.defaultParallelism, keys: _*)
     else df
 

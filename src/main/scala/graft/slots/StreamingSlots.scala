@@ -143,7 +143,7 @@ object StreamingSlots {
       // each trigger reads ONE file = one map task, so the portable
       // md5 signature kernel ran single-threaded per micro-batch; the
       // batch slots' fan-out spreads it (the three files are written
-      // above, always under SparkEntry.FanOutMaxBytes; the stateful
+      // above, always under SparkEntry.FanMaxBytes; the stateful
       // core re-shuffles by band bucket either way, and leader
       // clustering sorts by doc_id within the batch, so the
       // partitioning is invisible to the result)

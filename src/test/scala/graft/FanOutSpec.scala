@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 /** `SparkEntry.tfan` over a temp corpus dir: a table at most
-  * `FanOutMaxBytes` on disk gets ONE deterministic hash repartition to
+  * `FanMaxBytes` on disk gets ONE deterministic hash repartition to
   * defaultParallelism; a bigger one passes through untouched; a table
   * that cannot be sized fails loudly, naming its path. */
 class FanOutSpec extends SparkSpec {
@@ -33,9 +33,9 @@ class FanOutSpec extends SparkSpec {
   test("at the bound the frame fans out, above it the frame passes through untouched") {
     val df = spark.read.parquet(s"$corpus/documents.parquet")
     val keys = Seq(df("doc_id"))
-    assert(SparkEntry.fanOut(df, keys, SparkEntry.FanOutMaxBytes)
+    assert(SparkEntry.fanOut(df, keys, SparkEntry.FanMaxBytes)
       .rdd.getNumPartitions == spark.sparkContext.defaultParallelism)
-    val out = SparkEntry.fanOut(df, keys, SparkEntry.FanOutMaxBytes + 1)
+    val out = SparkEntry.fanOut(df, keys, SparkEntry.FanMaxBytes + 1)
     assert(out.queryExecution.logical eq df.queryExecution.logical,
       "above the bound the frame must pass through untouched")
   }
