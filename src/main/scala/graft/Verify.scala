@@ -1,17 +1,18 @@
 package graft
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  *
+  *   Verify <sfDir> <outDir> [name-part ...]
+  *
+  * Trailing args select slots the way Bench and PlanDump do
+  * ([[BenchSession.select]]); with none, every slot runs. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
+    val Seq(sfDir, outDir) = args.toSeq.take(2)
     val spark = BenchSession.create()
     new java.io.File(outDir).mkdirs()
-    // dev-only subset filter (comma-separated names); driver sets none
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    BenchSession.select(args.toSeq.drop(2)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -124,11 +124,11 @@ final case class FacetSpec(facets: Seq[(String, PlotSpec)]) {
     facets.map { case (label, spec) => spec.copy(title = Some(label)).toVegaLite }
       .mkString("[", ", ", "]")
 
-  /** The deterministic style cycle each facet renders with
-    * (plotter.py:394–408 marker/color/linestyle cycling): facet i →
-    * [[SvgRender.styleFor]](i), pinned in PlotterSpec. */
-  def styles: Seq[(String, FacetStyle)] =
-    facets.zipWithIndex.map { case ((lbl, _), i) => lbl -> SvgRender.styleFor(i) }
+  /** The deterministic style cycle each facet renders with under
+    * `theme` (plotter.py:394–408 marker/color/linestyle cycling): facet
+    * i → `theme.styleFor(i)`, pinned in PlotterSpec. */
+  def styles(theme: Theme = Theme.classic): Seq[(String, FacetStyle)] =
+    facets.zipWithIndex.map { case ((lbl, _), i) => lbl -> theme.styleFor(i) }
 
   /** Overlay render on shared axes — see [[SvgRender.renderFacets]]. */
   def toSvg(width: Int = 480, height: Int = 360,

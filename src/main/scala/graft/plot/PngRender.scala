@@ -2,32 +2,21 @@ package graft.plot
 
 import graft.functions.MediaCodecs
 
-/** Raster (PNG) rendering of [[PlotSpec]]s — the bitmap half of the
-  * presentation tier (the reference renders through matplotlib's Agg
-  * backend, ezdata/plotter.py:829–1711; here a pure-Scala scanline
-  * rasterizer feeds the repo's own standards-valid PNG encoder,
-  * [[MediaCodecs.pngEncodeRgb]]).
+/** Raster (PNG) output of the presentation tier: the one panel layout
+  * ([[Panel]]) drawn onto a [[Raster]] — a pure-Scala scanline
+  * rasterizer feeding the repo's own standards-valid PNG encoder,
+  * [[MediaCodecs.pngEncodeRgb]] (the reference renders through
+  * matplotlib's Agg backend, ezdata/plotter.py:829–1711).  Because
+  * [[SvgRender]] draws the same layout, the two formats place every
+  * mark, tick and label at the same coordinates; the raster rounds each
+  * to the nearest pixel.
   *
   * Deterministic by construction: integer/IEEE-double math only, no
   * java2d, no fonts from the OS (text uses the embedded [[Font5x7]]
   * bitmap face), no antialiasing — so output bytes are golden-pinnable
-  * across JVMs exactly like the SVG tier.  Geometry (margins, scales,
-  * ticks, mark placement) is shared with [[SvgRender]] so the two
-  * backends draw the same picture.
-  *
-  * Marks covered match SvgRender: `bar`, `point` (circle/square/
-  * triangle/diamond glyphs), `rect` (sequential ramp), `area`
-  * (violin density outlines), plus the composed facet overlay with
-  * style cycling and the corner grid with percentile annotations.
+  * across JVMs exactly like the SVG tier.
   */
 object PngRender {
-
-  import SvgRender.{Scale, extent, fieldOf, num, ticks, fmt}
-
-  private val White = 0xffffff
-  private val AxisGray = 0x999999
-  private val TextBlack = 0x000000
-  private val AnnGray = 0x555555
 
   private[plot] def hexColor(s: String): Int = {
     val h = s.stripPrefix("#")
@@ -35,260 +24,31 @@ object PngRender {
     Integer.parseInt(full, 16)
   }
 
+  private val raster: (Int, Int) => Raster = new Raster(_, _)
+
   /** Render one spec to PNG bytes. */
   def render(spec: PlotSpec, width: Int = 480, height: Int = 360,
-             color: String = null, theme: Theme = Theme.classic): Array[Byte] = {
-    val r = themedRaster(width, height, theme)
-    body(r, spec, 0, 0, width, height,
-      hexColor(Option(color).getOrElse(theme.palette(0))), title = spec.title,
-      theme = theme)
-    r.png
-  }
+             color: String = null, theme: Theme = Theme.classic): Array[Byte] =
+    Panel.single(spec, width, height, Option(color).getOrElse(theme.palette(0)), theme,
+      raster).png
 
-  private def themedRaster(w: Int, h: Int, theme: Theme): Raster = {
-    val r = new Raster(w, h)
-    // canvas is white already; a non-white themed background would fill here
-    theme.background.map(hexColor).filter(_ != White)
-      .foreach(bg => r.fillRect(0, 0, w - 1, h - 1, bg, 1.0))
-    r
-  }
-
-  /** Overlay facets on shared axes with the deterministic style cycle
-    * (plotter.py:394–408) — raster twin of [[SvgRender.renderFacets]]. */
+  /** Overlay facets on shared axes — see [[Panel.facets]]. */
   def renderFacets(f: FacetSpec, width: Int = 480, height: Int = 360,
-                   theme: Theme = Theme.classic): Array[Byte] = {
-    val r = themedRaster(width, height, theme)
-    val all = f.facets.map(_._2)
-    val merged = all.headOption.map(h => h.copy(data = all.flatMap(_.data))).toSeq
-    f.facets.zipWithIndex.foreach { case ((label, spec), i) =>
-      val st = theme.styleFor(i)
-      body(r, spec, 0, 0, width, height, hexColor(st.color),
-        axesFrom = merged.headOption, drawAxes = i == 0, dash = st.dash,
-        marker = st.marker, title = None, theme = theme)
-      val lx = width - 110; val ly = 18 + 16 * i
-      r.fillRect(lx, ly - 9, lx + 10, ly + 1, hexColor(st.color), 1.0)
-      r.text(lx + 14, ly, label, TextBlack, Anchor.Start)
-    }
-    r.png
-  }
+                   theme: Theme = Theme.classic): Array[Byte] =
+    Panel.facets(f, width, height, theme, raster).png
 
-  /** Corner grid with annotated diagonals — raster twin of
-    * [[SvgRender.renderCorner]] (plotter.py:1615–1711). */
+  /** Corner grid with annotated diagonals — see [[Panel.corner]]. */
   def renderCorner(c: CornerSpec, panel: Int = 220,
-                   theme: Theme = Theme.classic): Array[Byte] = {
-    val cols = c.panels.collect { case ((x, y), _) if x == y => x }
-    val idx = cols.zipWithIndex.toMap
-    val k = cols.size
-    val r = themedRaster(panel * k, panel * k, theme)
-    c.panels.foreach { case ((x, y), spec) =>
-      val (ix, iy) = (idx(x), idx(y))
-      val title = if (ix == iy) c.quantiles.get(x).map { case (p16, p50, p84) =>
-        // U+2212 minus, same string as SvgRender.renderCorner — Font5x7
-        // maps it onto the ASCII hyphen glyph so the pixels are stable.
-        s"$x = ${fmt(p50)} (+${fmt(p84 - p50)} / −${fmt(p50 - p16)})"
-      } else None
-      body(r, spec, ix * panel, iy * panel, panel, panel,
-        hexColor(theme.palette(0)), title = title, theme = theme)
-      if (ix == iy) c.quantiles.get(x).foreach { case (p16, p50, p84) =>
-        val xs = spec.data.map(row => num(row(fieldOf(spec, "x").getOrElse(x))))
-        val (lo, hi) = extent(xs, 0.02)
-        val sx = Scale(lo, hi, ix * panel + 38.0, ix * panel + panel - 8.0)
-        Seq(p16, p50, p84).foreach { q =>
-          r.dashedVLine(math.round(sx(q)).toInt, iy * panel + 22,
-            iy * panel + panel - 30, AnnGray, on = 4, off = 3)
-        }
-      }
-    }
-    r.png
-  }
-
-  /** One panel's marks + (optionally) axes inside the given rect —
-    * same layout constants and scale math as [[SvgRender]]'s body. */
-  private[plot] def body(r: Raster, spec: PlotSpec, x0: Int, y0: Int, w: Int, h: Int,
-                   color: Int, axesFrom: Option[PlotSpec] = None,
-                   drawAxes: Boolean = true, dash: String = "",
-                   marker: String = "circle", title: Option[String],
-                   theme: Theme = Theme.classic): Unit = {
-    if (spec.mark == "boxplot") { boxBody(r, spec, x0, y0, w, h, color, title, theme); return }
-    val ml = 38; val mr = 8; val mt = 22; val mb = 30
-    val xf = fieldOf(spec, "x").getOrElse(
-      throw new IllegalArgumentException(s"PngRender: mark '${spec.mark}' needs an x field"))
-    val yf = fieldOf(spec, "y").getOrElse(xf)
-    val cf = fieldOf(spec, "color")
-    val base = axesFrom.getOrElse(spec)
-    // log axes: position in log10 space, mirroring SvgRender.body
-    val xlog = SvgRender.isLogChannel(base, "x")
-    val ylog = SvgRender.isLogChannel(base, "y")
-    def tx(v: Double): Double = if (xlog) SvgRender.log10pos(v) else v
-    def ty(v: Double): Double = if (ylog) SvgRender.log10pos(v) else v
-    val xs = base.data.map(row => tx(num(row(xf))))
-    val ys = base.data.map(row => ty(num(row(yf))))
-    val pad = if (spec.mark == "point") 0.03 else 0.02
-    val (xlo, xhi) = extent(xs, pad)
-    val (ylo0, yhi) = extent(ys, pad)
-    val ylo = if (spec.mark == "bar" && !ylog) math.min(0.0, ylo0) else ylo0
-    val sx = Scale(xlo, xhi, x0 + ml.toDouble, x0 + w - mr.toDouble)
-    val sy = Scale(ylo, yhi, y0 + h - mb.toDouble, y0 + mt.toDouble)
-    if (drawAxes) {
-      val ac = hexColor(theme.axisColor)
-      val tickFill = theme.tickLabelColor.map(hexColor).getOrElse(TextBlack)
-      theme.spines match {
-        case "box" => r.strokeRect(x0 + ml, y0 + mt, x0 + w - mr, y0 + h - mb, ac)
-        case "lb" =>
-          r.vLine(x0 + ml, y0 + mt, y0 + h - mb, ac)
-          r.hLine(x0 + ml, x0 + w - mr, y0 + h - mb, ac)
-        case _ => ()
-      }
-      val xticks = SvgRender.axisTicks(xlo, xhi, xlog)
-      val yticks = SvgRender.axisTicks(ylo, yhi, ylog)
-      theme.gridColor.map(hexColor).foreach { gc => // majors only
-        xticks.filterNot(_._3).foreach { case (t, _, _) =>
-          r.vLine(math.round(sx(t)).toInt, y0 + mt, y0 + h - mb, gc) }
-        yticks.filterNot(_._3).foreach { case (t, _, _) =>
-          r.hLine(x0 + ml, x0 + w - mr, math.round(sy(t)).toInt, gc) }
-      }
-      xticks.foreach { case (t, label, minor) =>
-        val px = math.round(sx(t)).toInt
-        val len = if (minor) math.max(theme.tickLen - 2, 2) else theme.tickLen
-        if (theme.tickLen > 0) r.vLine(px, y0 + h - mb, y0 + h - mb + len, ac)
-        if (label.nonEmpty) r.text(px, y0 + h - mb + 15, label, tickFill, Anchor.Middle)
-      }
-      yticks.foreach { case (t, label, minor) =>
-        val py = math.round(sy(t)).toInt
-        val len = if (minor) math.max(theme.tickLen - 2, 2) else theme.tickLen
-        if (theme.tickLen > 0) r.hLine(x0 + ml - len, x0 + ml, py, ac)
-        if (label.nonEmpty) r.text(x0 + ml - 6, py + 3, label, tickFill, Anchor.End)
-      }
-      r.text(x0 + (ml + w - mr) / 2, y0 + h - 4, xf, TextBlack, Anchor.Middle)
-    }
-    title.foreach(t => r.text(x0 + w / 2, y0 + 14, t, TextBlack, Anchor.Middle))
-    spec.mark match {
-      case "bar" =>
-        val centers = spec.data.map(row => tx(num(row(xf)))).filterNot(_.isNaN).sorted
-        val bw = if (centers.size >= 2) centers.sliding(2).map(p => p(1) - p(0)).min
-                 else math.max(xhi - xlo, 1.0)
-        spec.data.foreach { row =>
-          val cx = tx(num(row(xf))); val cy = ty(num(row(yf)))
-          if (!cx.isNaN && !cy.isNaN) {
-            // SvgRender clamps height to max(ph, 0): a bar whose value
-            // sits below the axis floor renders as nothing, not as a
-            // flipped rect (Raster.fillRect would silently swap y0/y1).
-            val yTop = math.round(sy(cy)).toInt
-            val yBot = math.round(sy(ylo)).toInt
-            if (yBot >= yTop)
-              r.fillRect(math.round(sx(cx - bw / 2)).toInt, yTop,
-                math.round(sx(cx + bw / 2)).toInt, yBot, color, 0.75)
-          }
-        }
-      case "point" =>
-        val sizeF = fieldOf(spec, "size")
-        val cs = spec.data.map(row => cf.map(f => num(row(f))).getOrElse(Double.NaN))
-        val (clo, chi) = extent(cs.filterNot(_.isNaN))
-        spec.data.foreach { row =>
-          val px = tx(num(row(xf))); val py = ty(num(row(yf)))
-          if (!px.isNaN && !py.isNaN) {
-            val rad = sizeF.map(f => 1.5 + 2.5 * math.sqrt(math.max(num(row(f)), 0.0) /
-              math.max(spec.data.map(q => num(q(f))).filterNot(_.isNaN).max, 1.0))).getOrElse(2.5)
-            val fill = cf.map(f => hexColor(SvgRender.ramp(
-              (num(row(f)) - clo) / math.max(chi - clo, 1e-300)))).getOrElse(color)
-            r.glyph(marker, sx(px), sy(py), rad, fill, 0.8)
-          }
-        }
-      case "rect" =>
-        val cvs = spec.data.map(row => num(row(cf.getOrElse(yf))))
-        val (clo, chi) = extent(cvs.filterNot(_.isNaN))
-        val cxs = spec.data.map(row => tx(num(row(xf)))).filterNot(_.isNaN).distinct.sorted
-        val cys = spec.data.map(row => ty(num(row(yf)))).filterNot(_.isNaN).distinct.sorted
-        def spacing(cs: Seq[Double], fallback: Double) =
-          if (cs.size >= 2) cs.sliding(2).map(p => p(1) - p(0)).min else fallback
-        val bwx = spacing(cxs, math.max(xhi - xlo, 1.0))
-        val bwy = spacing(cys, math.max(yhi - ylo, 1.0))
-        spec.data.foreach { row =>
-          val px = tx(num(row(xf))); val py = ty(num(row(yf))); val cv = num(row(cf.getOrElse(yf)))
-          if (!px.isNaN && !py.isNaN && !cv.isNaN) {
-            r.fillRect(math.round(sx(px - bwx / 2)).toInt, math.round(sy(py + bwy / 2)).toInt,
-              math.round(sx(px + bwx / 2)).toInt, math.round(sy(py - bwy / 2)).toInt,
-              hexColor(SvgRender.ramp((cv - clo) / math.max(chi - clo, 1e-300))), 1.0)
-          }
-        }
-      case "area" =>
-        val varF = fieldOf(spec, "color").orElse(fieldOf(spec, "detail"))
-        val series = varF match {
-          case Some(f) => spec.data.groupBy(row => String.valueOf(row(f))).toSeq.sortBy(_._1)
-          case None => Seq("" -> spec.data)
-        }
-        series.zipWithIndex.foreach { case ((_, rows), i) =>
-          val pts = rows.map(row => (tx(num(row(xf))), ty(num(row(yf)))))
-            .filterNot(p => p._1.isNaN || p._2.isNaN).sortBy(_._1)
-            .map(p => (sx(p._1), sy(p._2)))
-          val st = theme.styleFor(i)
-          val c = hexColor(st.color)
-          r.fillPolygon(pts, c, 0.25)
-          val (on, off) = st.dash match {
-            case "" => (Int.MaxValue, 0)
-            case d => val p = d.split(","); (p(0).toInt, p(1).toInt)
-          }
-          pts.sliding(2).foreach {
-            case Seq(a, b) => r.dashedLine(a._1, a._2, b._1, b._2, c, on, off)
-            case _ => ()
-          }
-        }
-      case other =>
-        throw new IllegalArgumentException(
-          s"PngRender: mark '$other' has no raster backend (bar/point/rect/area/boxplot)")
-    }
-  }
-
-  /** Boxplot panel — raster twin of SvgRender's boxBody (whisker +
-    * interquartile box + median bar per variable, categorical x). */
-  private def boxBody(r: Raster, spec: PlotSpec, x0: Int, y0: Int, w: Int, h: Int,
-                      color: Int, title: Option[String],
-                      theme: Theme = Theme.classic): Unit = {
-    val ml = 38; val mr = 8; val mt = 22; val mb = 30
-    val rows = spec.data
-    val k = math.max(rows.size, 1)
-    val los = rows.map(row => num(row("min"))); val his = rows.map(row => num(row("max")))
-    val (ylo, yhi) = extent(los ++ his, 0.02)
-    val sy = Scale(ylo, yhi, y0 + h - mb.toDouble, y0 + mt.toDouble)
-    val sx = Scale(0.0, k.toDouble, x0 + ml.toDouble, x0 + w - mr.toDouble)
-    val ac = hexColor(theme.axisColor)
-    val tickFill = theme.tickLabelColor.map(hexColor).getOrElse(TextBlack)
-    theme.spines match {
-      case "box" => r.strokeRect(x0 + ml, y0 + mt, x0 + w - mr, y0 + h - mb, ac)
-      case "lb" =>
-        r.vLine(x0 + ml, y0 + mt, y0 + h - mb, ac)
-        r.hLine(x0 + ml, x0 + w - mr, y0 + h - mb, ac)
-      case _ => ()
-    }
-    ticks(ylo, yhi).foreach { t =>
-      val py = math.round(sy(t)).toInt
-      theme.gridColor.map(hexColor).foreach(gc => r.hLine(x0 + ml, x0 + w - mr, py, gc))
-      if (theme.tickLen > 0) r.hLine(x0 + ml - theme.tickLen, x0 + ml, py, ac)
-      r.text(x0 + ml - 6, py + 3, fmt(t), tickFill, Anchor.End)
-    }
-    title.foreach(t => r.text(x0 + w / 2, y0 + 14, t, TextBlack, Anchor.Middle))
-    rows.zipWithIndex.foreach { case (row, i) =>
-      val cx = sx(i + 0.5); val half = sx(0.8) - sx(0.5)
-      val (mn, q1, med, q3, mx) =
-        (num(row("min")), num(row("q1")), num(row("median")), num(row("q3")), num(row("max")))
-      val cxi = math.round(cx).toInt
-      r.vLine(cxi, math.round(sy(mx)).toInt, math.round(sy(mn)).toInt, AnnGray)
-      Seq(mn, mx).foreach(v => r.hLine(math.round(cx - half / 2).toInt,
-        math.round(cx + half / 2).toInt, math.round(sy(v)).toInt, AnnGray))
-      val (bx0, bx1) = (math.round(cx - half).toInt, math.round(cx + half).toInt)
-      val (by0, by1) = (math.round(sy(q3)).toInt, math.round(sy(q1)).toInt)
-      r.fillRect(bx0, by0, bx1, by1, color, 0.6)
-      r.strokeRect(bx0, by0, bx1, by1, AnnGray)
-      r.hLine(bx0, bx1, math.round(sy(med)).toInt, TextBlack)
-      r.text(cxi, y0 + h - mb + 15, String.valueOf(row("variable")), TextBlack, Anchor.Middle)
-    }
-  }
+                   theme: Theme = Theme.classic): Array[Byte] =
+    Panel.corner(c, panel, theme, raster).png
 
   private[plot] object Anchor extends Enumeration { val Start, Middle, End = Value }
 
   /** Minimal deterministic RGB24 scanline rasterizer: white canvas,
-    * integer alpha blending, no antialiasing, bounds-checked writes. */
-  private[plot] final class Raster(val w: Int, val h: Int) {
+    * integer alpha blending, no antialiasing, bounds-checked writes.
+    * As a [[Canvas]] it rounds every coordinate to the nearest pixel;
+    * rect corners are inclusive. */
+  private[plot] final class Raster(val w: Int, val h: Int) extends Canvas {
     require(w > 0 && h > 0 && w.toLong * h <= (1L << 24),
       s"PngRender: canvas ${w}x$h exceeds the 2^24-pixel cap")
     private val buf = Array.fill[Byte](w * h * 3)(0xff.toByte)
@@ -302,27 +62,27 @@ object PngRender {
         buf(p + 2) = mix(buf(p + 2) & 0xff, rgb & 0xff).toByte
       }
 
-    def hLine(x0: Int, x1: Int, y: Int, rgb: Int, a: Double = 1.0): Unit = {
+    private def hLine(x0: Int, x1: Int, y: Int, rgb: Int, a: Double = 1.0): Unit = {
       var x = math.min(x0, x1); val xe = math.max(x0, x1)
       while (x <= xe) { blend(x, y, rgb, a); x += 1 }
     }
-    def vLine(x: Int, y0: Int, y1: Int, rgb: Int, a: Double = 1.0): Unit = {
+    private def vLine(x: Int, y0: Int, y1: Int, rgb: Int): Unit = {
       var y = math.min(y0, y1); val ye = math.max(y0, y1)
-      while (y <= ye) { blend(x, y, rgb, a); y += 1 }
+      while (y <= ye) { blend(x, y, rgb, 1.0); y += 1 }
     }
-    def dashedVLine(x: Int, y0: Int, y1: Int, rgb: Int, on: Int, off: Int): Unit = {
+    private def dashedVLine(x: Int, y0: Int, y1: Int, rgb: Int, on: Int, off: Int): Unit = {
       var y = math.min(y0, y1); val ye = math.max(y0, y1); var k = 0
       while (y <= ye) { if (k % (on + off) < on) blend(x, y, rgb, 1.0); y += 1; k += 1 }
     }
-    def strokeRect(x0: Int, y0: Int, x1: Int, y1: Int, rgb: Int): Unit = {
+    private def strokeBox(x0: Int, y0: Int, x1: Int, y1: Int, rgb: Int): Unit = {
       hLine(x0, x1, y0, rgb); hLine(x0, x1, y1, rgb)
       vLine(x0, y0, y1, rgb); vLine(x1, y0, y1, rgb)
     }
-    def fillRect(x0: Int, y0: Int, x1: Int, y1: Int, rgb: Int, a: Double): Unit = {
+    private def fillBox(x0: Int, y0: Int, x1: Int, y1: Int, rgb: Int, a: Double): Unit = {
       var y = math.min(y0, y1); val ye = math.max(y0, y1)
       while (y <= ye) { hLine(x0, x1, y, rgb, a); y += 1 }
     }
-    def fillCircle(cx: Double, cy: Double, rad: Double, rgb: Int, a: Double): Unit = {
+    private def fillCircle(cx: Double, cy: Double, rad: Double, rgb: Int, a: Double): Unit = {
       var y = math.ceil(cy - rad).toInt; val ye = math.floor(cy + rad).toInt
       while (y <= ye) {
         val dy = y - cy
@@ -332,7 +92,7 @@ object PngRender {
       }
     }
     /** Even-odd scanline polygon fill (closed implicitly). */
-    def fillPolygon(pts: Seq[(Double, Double)], rgb: Int, a: Double): Unit = {
+    private def fillPolygon(pts: Seq[(Double, Double)], rgb: Int, a: Double): Unit = {
       if (pts.size < 3) return
       val ymin = math.ceil(pts.map(_._2).min).toInt
       val ymax = math.floor(pts.map(_._2).max).toInt
@@ -353,8 +113,8 @@ object PngRender {
       }
     }
     /** DDA line with an on/off dash counter — deterministic stepping. */
-    def dashedLine(x0: Double, y0: Double, x1: Double, y1: Double,
-                   rgb: Int, on: Int, off: Int): Unit = {
+    private def dashedLine(x0: Double, y0: Double, x1: Double, y1: Double,
+                           rgb: Int, on: Int, off: Int): Unit = {
       val steps = math.max(math.abs(x1 - x0), math.abs(y1 - y0)).toInt + 1
       var i = 0
       while (i <= steps) {
@@ -366,17 +126,59 @@ object PngRender {
         i += 1
       }
     }
-    def glyph(marker: String, x: Double, y: Double, rad: Double, rgb: Int, a: Double): Unit =
-      marker match {
-        case "square" =>
-          fillRect(math.round(x - rad).toInt, math.round(y - rad).toInt,
-            math.round(x + rad).toInt, math.round(y + rad).toInt, rgb, a)
-        case "triangle" =>
-          fillPolygon(Seq((x, y - rad), (x - rad, y + rad), (x + rad, y + rad)), rgb, a)
-        case "diamond" =>
-          fillPolygon(Seq((x, y - rad), (x + rad, y), (x, y + rad), (x - rad, y)), rgb, a)
-        case _ => fillCircle(x, y, rad, rgb, a)
+
+    // ── Canvas ──
+    private def px(v: Double): Int = math.round(v).toInt
+    private def dashPattern(dash: String): (Int, Int) = dash match {
+      case "" => (Int.MaxValue, 0)
+      case d => val p = d.split(","); (p(0).toInt, p(1).toInt)
+    }
+
+    def backend: String = "raster"
+    def line(x1: Double, y1: Double, x2: Double, y2: Double, stroke: String, dash: String): Unit = {
+      val rgb = hexColor(stroke); val (on, off) = dashPattern(dash)
+      if (x1 == x2) dashedVLine(px(x1), px(y1), px(y2), rgb, on, off)
+      else if (y1 == y2 && off == 0) hLine(px(x1), px(x2), px(y1), rgb)
+      else dashedLine(x1, y1, x2, y2, rgb, on, off)
+    }
+    def fillRect(x0: Double, y0: Double, x1: Double, y1: Double, fill: String,
+                 opacity: Double, stroke: Option[String]): Unit = {
+      val (l, t, r, b) = (px(x0), px(y0), px(x1), px(y1))
+      if (r >= l && b >= t) {
+        fillBox(l, t, r, b, hexColor(fill), opacity)
+        stroke.foreach(s => strokeBox(l, t, r, b, hexColor(s)))
       }
+    }
+    def strokeRect(x0: Double, y0: Double, x1: Double, y1: Double, stroke: String): Unit =
+      strokeBox(px(x0), px(y0), px(x1), px(y1), hexColor(stroke))
+    def glyph(marker: String, x: Double, y: Double, r: Double, fill: String, opacity: Double): Unit = {
+      val rgb = hexColor(fill)
+      marker match {
+        case "square" => fillBox(px(x - r), px(y - r), px(x + r), px(y + r), rgb, opacity)
+        case "triangle" =>
+          fillPolygon(Seq((x, y - r), (x - r, y + r), (x + r, y + r)), rgb, opacity)
+        case "diamond" =>
+          fillPolygon(Seq((x, y - r), (x + r, y), (x, y + r), (x - r, y)), rgb, opacity)
+        case _ => fillCircle(x, y, r, rgb, opacity)
+      }
+    }
+    def polyline(pts: Seq[(Double, Double)], color: String, fillOpacity: Double, dash: String): Unit = {
+      val rgb = hexColor(color)
+      fillPolygon(pts, rgb, fillOpacity)
+      val (on, off) = dashPattern(dash)
+      pts.sliding(2).foreach {
+        case Seq(a, b) => dashedLine(a._1, a._2, b._1, b._2, rgb, on, off)
+        case _ => ()
+      }
+    }
+    /** The embedded face has one size; `size` is ignored. */
+    def text(x: Double, y: Double, s: String, size: Int, anchor: String, fill: Option[String]): Unit =
+      text(px(x), px(y), s, fill.fold(0x000000)(hexColor), anchor match {
+        case "middle" => Anchor.Middle
+        case "end" => Anchor.End
+        case _ => Anchor.Start
+      })
+
     /** Draw `s` with the embedded 5×7 face, `y` = text baseline. */
     def text(x: Int, y: Int, s: String, rgb: Int, anchor: Anchor.Value): Unit = {
       val width = if (s.isEmpty) 0 else s.length * 6 - 1

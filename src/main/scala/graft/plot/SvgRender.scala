@@ -1,432 +1,86 @@
 package graft.plot
 
-import java.util.Locale
+import Panel._
 
-/** Pure-JVM SVG rendering of [[PlotSpec]]s — the presentation tier the
-  * reference gets from matplotlib/plotly/bokeh (ezdata/plotter.py:829–
-  * 1711), reduced to its deterministic core: a `PlotSpec` already
-  * carries the AGGREGATED data (bin counts, pixel grids, bounded
-  * samples), so rendering is pure string assembly over at most a few
-  * thousand rows — no native dependencies, no display, byte-stable
-  * output (golden-pinned in PlotterSpec).
-  *
-  * Marks covered: `bar` (hist, plotter.py:877–896), `point` (scatter/
-  * hexbin, :829–843), `rect` (hist2d/raster/healpix grids, :898–941),
-  * `area` (violin densities), plus the composed corner grid
-  * (:1615–1711) with its diagonal percentile annotations and the
-  * facet overlay with the reference's deterministic style cycling
-  * (:394–408).
+/** SVG output of the presentation tier: the one panel layout
+  * ([[Panel]]) drawn onto an [[SvgCanvas]] that appends one SVG element
+  * per primitive — pure string assembly, no native dependencies, no
+  * display, byte-stable output (golden-pinned in PlotterSpec).
+  * [[PngRender]] draws the same layout onto a raster.  The legend,
+  * colorbar and figure-combining helpers below are SVG-only.
   */
 object SvgRender {
-
-  /** The reference's matplotlib default prop cycle (tab10) — facet i
-    * takes color `palette(i % 10)`, marker `markers(i % 4)`, dash
-    * `dashes(i % 3)`, exactly the plotter.py:394–408 cycling rule. */
-  val palette: IndexedSeq[String] = Vector(
-    "#1f77b4", "#ff7f0e", "#2ca02c", "#d62728", "#9467bd",
-    "#8c564b", "#e377c2", "#7f7f7f", "#bcbd22", "#17becf")
-  val markers: IndexedSeq[String] = Vector("circle", "square", "triangle", "diamond")
-  val dashes: IndexedSeq[String] = Vector("", "6,3", "2,3")
-
-  /** Deterministic style assignment for the i-th facet. */
-  def styleFor(i: Int): FacetStyle =
-    FacetStyle(palette(i % palette.size), markers(i % markers.size), dashes(i % dashes.size))
-
-  /** Locale-stable compact number format (axis ticks, annotations). */
-  def fmt(d: Double): String = {
-    if (d == d.toLong.toDouble && math.abs(d) < 1e12) d.toLong.toString
-    else String.format(Locale.ROOT, "%.4g", Double.box(d))
-  }
 
   private def esc(s: String): String =
     s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;").replace("\"", "&quot;")
 
-  private[plot] def num(v: Any): Double = v match {
-    case null => Double.NaN
-    case n: Number => n.doubleValue()
-    case other => try other.toString.toDouble catch { case _: NumberFormatException => Double.NaN }
-  }
+  /** A standalone SVG document under construction; [[result]] closes it. */
+  private[plot] final class SvgCanvas(w: Int, h: Int, fontFamily: String) extends Canvas {
+    private val b = new StringBuilder
+    b ++= s"""<svg xmlns="http://www.w3.org/2000/svg" width="$w" height="$h" viewBox="0 0 $w $h" font-family="$fontFamily">"""
 
-  /** log10 for axis positioning: non-positive values have no place on
-    * a log axis and drop out as NaN (the matplotlib/plotly contract). */
-  private[graft] def log10pos(v: Double): Double =
-    if (v > 0) math.log10(v) else Double.NaN
+    def backend: String = "SVG"
+    /** Append an already-formed SVG fragment (legend, colorbar). */
+    def append(fragment: String): Unit = b ++= fragment
+    def result: String = b.toString + "</svg>"
 
-  /** Log-axis ticks over a LOG10-SPACE range [lo, hi]: (position in
-    * log space, label, isMinor).  Major ticks at integer decades
-    * (labeled with the decade value), minor unlabeled ticks at
-    * mantissas 2–9 (reference plotly/tools.py:105–204 log tick
-    * generation); when the span covers fewer than two decade ticks
-    * the 2/5 mantissa ticks get labels so short ranges stay
-    * readable. */
-  private[graft] def logTicks(lo: Double, hi: Double): Seq[(Double, String, Boolean)] = {
-    if (!(hi > lo)) return Seq((lo, fmt(math.pow(10, lo)), false))
-    val k0 = math.floor(lo).toInt
-    val k1 = math.ceil(hi).toInt
-    val nMajors = (k0 to k1).count(k => k >= lo - 1e-9 && k <= hi + 1e-9)
-    val labelMinors = nMajors < 2
-    val out = Seq.newBuilder[(Double, String, Boolean)]
-    var k = k0
-    while (k <= k1) {
-      var m = 1
-      while (m <= 9) {
-        val p = k + math.log10(m.toDouble)
-        if (p >= lo - 1e-9 && p <= hi + 1e-9) {
-          if (m == 1) out += ((p, fmt(math.pow(10, k)), false))
-          else if (labelMinors && (m == 2 || m == 5))
-            out += ((p, fmt(m * math.pow(10, k)), false))
-          else out += ((p, "", true))
-        }
-        m += 1
-      }
-      k += 1
+    private def dashAttr(dash: String): String =
+      if (dash.nonEmpty) s""" stroke-dasharray="$dash"""" else ""
+    private def opacityAttr(opacity: Double): String =
+      if (opacity < 1.0) s""" fill-opacity="$opacity"""" else ""
+
+    def line(x1: Double, y1: Double, x2: Double, y2: Double, stroke: String, dash: String): Unit =
+      b ++= s"""<line x1="${fmt(x1)}" y1="${fmt(y1)}" x2="${fmt(x2)}" y2="${fmt(y2)}" stroke="$stroke"${dashAttr(dash)}/>"""
+    private def rect(x0: Double, y0: Double, x1: Double, y1: Double, attrs: String): Unit =
+      b ++= s"""<rect x="${fmt(x0)}" y="${fmt(y0)}" width="${fmt(math.max(x1 - x0, 0.0))}" height="${fmt(math.max(y1 - y0, 0.0))}" $attrs/>"""
+    def fillRect(x0: Double, y0: Double, x1: Double, y1: Double, fill: String,
+                 opacity: Double, stroke: Option[String]): Unit =
+      rect(x0, y0, x1, y1,
+        s"""fill="$fill"${opacityAttr(opacity)}${stroke.fold("")(s => s""" stroke="$s"""")}""")
+    def strokeRect(x0: Double, y0: Double, x1: Double, y1: Double, stroke: String): Unit =
+      rect(x0, y0, x1, y1, s"""fill="none" stroke="$stroke"""")
+    def glyph(marker: String, x: Double, y: Double, r: Double, fill: String, opacity: Double): Unit = {
+      val paint = s"""fill="$fill"${opacityAttr(opacity)}"""
+      b ++= (marker match {
+        case "square" =>
+          s"""<rect x="${fmt(x - r)}" y="${fmt(y - r)}" width="${fmt(2 * r)}" height="${fmt(2 * r)}" $paint/>"""
+        case "triangle" =>
+          s"""<polygon points="${fmt(x)},${fmt(y - r)} ${fmt(x - r)},${fmt(y + r)} ${fmt(x + r)},${fmt(y + r)}" $paint/>"""
+        case "diamond" =>
+          s"""<polygon points="${fmt(x)},${fmt(y - r)} ${fmt(x + r)},${fmt(y)} ${fmt(x)},${fmt(y + r)} ${fmt(x - r)},${fmt(y)}" $paint/>"""
+        case _ =>
+          s"""<circle cx="${fmt(x)}" cy="${fmt(y)}" r="${fmt(r)}" $paint/>"""
+      })
     }
-    out.result()
-  }
-
-  /** Unified tick list for one axis: (position in scale space, label,
-    * isMinor).  Linear axes label every tick; log axes delegate to
-    * [[logTicks]]. */
-  private[graft] def axisTicks(lo: Double, hi: Double, isLog: Boolean): Seq[(Double, String, Boolean)] =
-    if (isLog) logTicks(lo, hi) else ticks(lo, hi).map(t => (t, fmt(t), false))
-
-  /** Whether a channel requests a log scale (`"scale" -> "log"` in the
-    * encoding — the [[PlotSpec.logScale]] flag). */
-  private[plot] def isLogChannel(spec: PlotSpec, channel: String): Boolean =
-    spec.encoding.get(channel).exists(_.get("scale").contains("log"))
-
-  /** ~`n` "nice" tick positions covering [lo, hi] (1/2/5 steps). */
-  private[plot] def ticks(lo: Double, hi: Double, n: Int = 4): Seq[Double] = {
-    if (!(hi > lo)) return Seq(lo)
-    val raw = (hi - lo) / n
-    val mag = math.pow(10, math.floor(math.log10(raw)))
-    val step = (raw / mag) match {
-      case r if r <= 1.5 => mag
-      case r if r <= 3.5 => 2 * mag
-      case r if r <= 7.5 => 5 * mag
-      case _ => 10 * mag
+    def polyline(pts: Seq[(Double, Double)], color: String, fillOpacity: Double, dash: String): Unit = {
+      val points = pts.map(p => s"${fmt(p._1)},${fmt(p._2)}").mkString(" ")
+      b ++= s"""<polyline points="$points" fill="$color"${opacityAttr(fillOpacity)} stroke="$color"${dashAttr(dash)}/>"""
     }
-    val start = math.ceil(lo / step) * step
-    Iterator.iterate(start)(_ + step).takeWhile(_ <= hi + step * 1e-9).toSeq
-  }
-
-  /** 5-stop viridis-ish sequential ramp for `color` channels. */
-  private[plot] def ramp(t: Double): String = {
-    val stops = Vector((68, 1, 84), (59, 82, 139), (33, 145, 140), (94, 201, 98), (253, 231, 37))
-    val x = math.max(0.0, math.min(1.0, t)) * (stops.size - 1)
-    val i = math.min(stops.size - 2, x.toInt)
-    val f = x - i
-    val (r0, g0, b0) = stops(i); val (r1, g1, b1) = stops(i + 1)
-    def mix(a: Int, b: Int) = math.round(a + (b - a) * f).toInt
-    f"#${mix(r0, r1)}%02x${mix(g0, g1)}%02x${mix(b0, b1)}%02x"
-  }
-
-  private[plot] case class Scale(lo: Double, hi: Double, pixLo: Double, pixHi: Double) {
-    def apply(v: Double): Double =
-      if (hi == lo) (pixLo + pixHi) / 2
-      else pixLo + (v - lo) / (hi - lo) * (pixHi - pixLo)
-  }
-
-  private[plot] def fieldOf(spec: PlotSpec, channel: String): Option[String] =
-    spec.encoding.get(channel).flatMap(_.get("field"))
-
-  private[plot] def extent(vs: Seq[Double], padFrac: Double = 0.0): (Double, Double) = {
-    val clean = vs.filterNot(_.isNaN)
-    if (clean.isEmpty) (0.0, 1.0)
-    else {
-      val (lo, hi) = (clean.min, clean.max)
-      val pad = if (hi > lo) (hi - lo) * padFrac else math.max(math.abs(lo), 1.0) * 0.05
-      (lo - pad, hi + pad)
+    def text(x: Double, y: Double, s: String, size: Int, anchor: String, fill: Option[String]): Unit = {
+      val anchorAttr = if (anchor == "start") "" else s""" text-anchor="$anchor""""
+      val fillAttr = fill.fold("")(c => s""" fill="$c"""")
+      b ++= s"""<text x="${fmt(x)}" y="${fmt(y)}" font-size="$size"$anchorAttr$fillAttr>${esc(s)}</text>"""
     }
   }
+
+  private def canvas(theme: Theme): (Int, Int) => SvgCanvas =
+    new SvgCanvas(_, _, theme.fontFamily)
 
   /** Render one spec to a standalone SVG document. */
   def render(spec: PlotSpec, width: Int = 480, height: Int = 360,
-             color: String = null, theme: Theme = Theme.classic): String = {
-    val b = new StringBuilder
-    b ++= svgOpen(width, height, theme)
-    b ++= body(spec, 0, 0, width, height,
-      Option(color).getOrElse(theme.palette(0)), title = spec.title, theme = theme)
-    b ++= "</svg>"
-    b.toString
-  }
+             color: String = null, theme: Theme = Theme.classic): String =
+    single(spec, width, height, Option(color).getOrElse(theme.palette(0)), theme,
+      canvas(theme)).result
 
-  private def svgOpen(w: Int, h: Int, theme: Theme): String = {
-    val open = s"""<svg xmlns="http://www.w3.org/2000/svg" width="$w" height="$h" viewBox="0 0 $w $h" font-family="${theme.fontFamily}">"""
-    theme.background.fold(open)(bg =>
-      open + s"""<rect x="0" y="0" width="$w" height="$h" fill="$bg"/>""")
-  }
-
-  /** Overlay facets on SHARED axes with the deterministic style cycle
-    * (plotter.py:394–408: each group advances the prop cycle). */
+  /** Overlay facets on shared axes — see [[Panel.facets]]. */
   def renderFacets(f: FacetSpec, width: Int = 480, height: Int = 360,
-                   theme: Theme = Theme.classic): String = {
-    val b = new StringBuilder
-    b ++= svgOpen(width, height, theme)
-    // shared scales: union of every facet's data extent
-    val all = f.facets.map(_._2)
-    val merged = all.headOption.map(h => h.copy(data = all.flatMap(_.data))).toSeq
-    f.facets.zipWithIndex.foreach { case ((label, spec), i) =>
-      val st = theme.styleFor(i)
-      b ++= body(spec, 0, 0, width, height, st.color,
-        axesFrom = merged.headOption, drawAxes = i == 0, dash = st.dash,
-        marker = st.marker, title = None, theme = theme)
-      val lx = width - 110; val ly = 18 + 16 * i
-      b ++= s"""<rect x="$lx" y="${ly - 9}" width="10" height="10" fill="${st.color}"/>"""
-      b ++= s"""<text x="${lx + 14}" y="$ly" font-size="11">${esc(label)}</text>"""
-    }
-    b ++= "</svg>"
-    b.toString
-  }
+                   theme: Theme = Theme.classic): String =
+    facets(f, width, height, theme, canvas(theme)).result
 
-  /** Corner grid (plotter.py:1615–1711): lower-triangle panels,
-    * diagonal hists annotated `v = p50 (+p84−p50 / −p50−p16)`, shared
-    * column ordering. */
+  /** Corner grid with annotated diagonals — see [[Panel.corner]]. */
   def renderCorner(c: CornerSpec, panel: Int = 220,
-                   theme: Theme = Theme.classic): String = {
-    val cols = c.panels.collect { case ((x, y), _) if x == y => x }
-    val idx = cols.zipWithIndex.toMap
-    val k = cols.size
-    val w = panel * k; val h = panel * k
-    val b = new StringBuilder
-    b ++= svgOpen(w, h, theme)
-    c.panels.foreach { case ((x, y), spec) =>
-      val (ix, iy) = (idx(x), idx(y))
-      val title = if (ix == iy) c.quantiles.get(x).map { case (p16, p50, p84) =>
-        s"$x = ${fmt(p50)} (+${fmt(p84 - p50)} / −${fmt(p50 - p16)})"
-      } else None
-      b ++= body(spec, ix * panel, iy * panel, panel, panel, theme.palette(0),
-        title = title, theme = theme)
-      // percentile annotation lines on the diagonal hists
-      if (ix == iy) c.quantiles.get(x).foreach { case (p16, p50, p84) =>
-        val xs = spec.data.map(r => num(r(fieldOf(spec, "x").getOrElse(x))))
-        val (lo, hi) = extent(xs, 0.02)
-        val sx = Scale(lo, hi, ix * panel + 38.0, ix * panel + panel - 8.0)
-        Seq(p16, p50, p84).foreach { q =>
-          b ++= s"""<line x1="${fmt(sx(q))}" y1="${iy * panel + 22}" x2="${fmt(sx(q))}" y2="${iy * panel + panel - 30}" stroke="#555" stroke-dasharray="4,3"/>"""
-        }
-      }
-    }
-    b ++= "</svg>"
-    b.toString
-  }
-
-  /** One panel's marks + (optionally) axes inside the given rect. */
-  private def body(spec: PlotSpec, x0: Int, y0: Int, w: Int, h: Int,
-                   color: String, axesFrom: Option[PlotSpec] = None,
-                   drawAxes: Boolean = true, dash: String = "",
-                   marker: String = "circle", title: Option[String],
-                   theme: Theme = Theme.classic): String = {
-    if (spec.mark == "boxplot") return boxBody(spec, x0, y0, w, h, color, title, theme)
-    val ml = 38; val mr = 8; val mt = 22; val mb = 30
-    val xf = fieldOf(spec, "x").getOrElse(
-      throw new IllegalArgumentException(s"SvgRender: mark '${spec.mark}' needs an x field"))
-    val yf = fieldOf(spec, "y").getOrElse(xf)
-    val cf = fieldOf(spec, "color")
-    val base = axesFrom.getOrElse(spec)
-    // log axes: position EVERYTHING in log10 space (scales, ticks,
-    // marks); non-positive values drop out as NaN
-    val xlog = isLogChannel(base, "x")
-    val ylog = isLogChannel(base, "y")
-    def tx(v: Double): Double = if (xlog) log10pos(v) else v
-    def ty(v: Double): Double = if (ylog) log10pos(v) else v
-    // color-channel log (reference plotly/tools.py:105-204 logscale):
-    // ramp normalization runs over log10 of the color data
-    val clog = isLogChannel(base, "color")
-    def tc(v: Double): Double = if (clog) log10pos(v) else v
-    val xs = base.data.map(r => tx(num(r(xf))))
-    val ys = base.data.map(r => ty(num(r(yf))))
-    val pad = if (spec.mark == "point") 0.03 else 0.02
-    val (xlo, xhi) = extent(xs, pad)
-    val (ylo0, yhi) = extent(ys, pad)
-    val ylo = if (spec.mark == "bar" && !ylog) math.min(0.0, ylo0) else ylo0
-    val sx = Scale(xlo, xhi, x0 + ml.toDouble, x0 + w - mr.toDouble)
-    val sy = Scale(ylo, yhi, y0 + h - mb.toDouble, y0 + mt.toDouble)
-    val b = new StringBuilder
-    if (drawAxes) {
-      val ac = theme.axisColor
-      val tickFill = theme.tickLabelColor.fold("")(c => s""" fill="$c"""")
-      theme.spines match {
-        case "box" =>
-          b ++= s"""<rect x="${x0 + ml}" y="${y0 + mt}" width="${w - ml - mr}" height="${h - mt - mb}" fill="none" stroke="$ac"/>"""
-        case "lb" => // left + bottom spines only (light_minimal_theme.py:26–27)
-          b ++= s"""<line x1="${x0 + ml}" y1="${y0 + mt}" x2="${x0 + ml}" y2="${y0 + h - mb}" stroke="$ac"/>"""
-          b ++= s"""<line x1="${x0 + ml}" y1="${y0 + h - mb}" x2="${x0 + w - mr}" y2="${y0 + h - mb}" stroke="$ac"/>"""
-        case _ => ()
-      }
-      val xticks = axisTicks(xlo, xhi, xlog)
-      val yticks = axisTicks(ylo, yhi, ylog)
-      theme.gridColor.foreach { gc => // gridlines at MAJOR ticks only
-        xticks.filterNot(_._3).foreach { case (t, _, _) =>
-          b ++= s"""<line x1="${fmt(sx(t))}" y1="${y0 + mt}" x2="${fmt(sx(t))}" y2="${y0 + h - mb}" stroke="$gc"/>"""
-        }
-        yticks.filterNot(_._3).foreach { case (t, _, _) =>
-          b ++= s"""<line x1="${x0 + ml}" y1="${fmt(sy(t))}" x2="${x0 + w - mr}" y2="${fmt(sy(t))}" stroke="$gc"/>"""
-        }
-      }
-      xticks.foreach { case (t, label, minor) =>
-        val len = if (minor) math.max(theme.tickLen - 2, 2) else theme.tickLen
-        if (theme.tickLen > 0)
-          b ++= s"""<line x1="${fmt(sx(t))}" y1="${y0 + h - mb}" x2="${fmt(sx(t))}" y2="${y0 + h - mb + len}" stroke="$ac"/>"""
-        if (label.nonEmpty)
-          b ++= s"""<text x="${fmt(sx(t))}" y="${y0 + h - mb + 15}" font-size="${theme.tickFontPx}" text-anchor="middle"$tickFill>$label</text>"""
-      }
-      yticks.foreach { case (t, label, minor) =>
-        val len = if (minor) math.max(theme.tickLen - 2, 2) else theme.tickLen
-        if (theme.tickLen > 0)
-          b ++= s"""<line x1="${x0 + ml - len}" y1="${fmt(sy(t))}" x2="${x0 + ml}" y2="${fmt(sy(t))}" stroke="$ac"/>"""
-        if (label.nonEmpty)
-          b ++= s"""<text x="${x0 + ml - 6}" y="${fmt(sy(t) + 3)}" font-size="${theme.tickFontPx}" text-anchor="end"$tickFill>$label</text>"""
-      }
-      b ++= s"""<text x="${x0 + (ml + w - mr) / 2}" y="${y0 + h - 4}" font-size="${theme.labelFontPx}" text-anchor="middle">${esc(xf)}</text>"""
-    }
-    title.foreach(t =>
-      b ++= s"""<text x="${x0 + w / 2}" y="${y0 + 14}" font-size="${theme.titleFontPx}" text-anchor="middle">${esc(t)}</text>""")
-    spec.mark match {
-      case "bar" =>
-        // per-bar edges at the midpoints between neighboring centers in
-        // the (possibly log-transformed) axis space: on a log axis,
-        // linearly uniform histogram centers have SHRINKING spacing to
-        // the right, so a single global min-spacing width would render
-        // every bar at the narrowest width with growing gaps toward the
-        // left; midpoint edges keep the bars contiguous on both linear
-        // and log axes (identical geometry to the old min-spacing rule
-        // when the transformed centers are uniform)
-        val centers = spec.data.map(r => tx(num(r(xf)))).filterNot(_.isNaN).distinct.sorted
-        val edges: Map[Double, (Double, Double)] =
-          if (centers.size >= 2) {
-            val mids = centers.sliding(2).map(p => (p(0) + p(1)) / 2).toVector
-            val lo = centers.head - (mids.head - centers.head)
-            val hi = centers.last + (centers.last - mids.last)
-            val all = lo +: mids :+ hi
-            centers.indices.map(i => centers(i) -> ((all(i), all(i + 1)))).toMap
-          } else {
-            val half = math.max(xhi - xlo, 1.0) / 2
-            centers.map(c => c -> ((c - half, c + half))).toMap
-          }
-        spec.data.foreach { r =>
-          val cx = tx(num(r(xf))); val cy = ty(num(r(yf)))
-          if (!cx.isNaN && !cy.isNaN) {
-            val (elo, ehi) = edges(cx)
-            val px = sx(elo); val pw = sx(ehi) - px
-            val py = sy(cy); val ph = sy(ylo) - py
-            b ++= s"""<rect x="${fmt(px)}" y="${fmt(py)}" width="${fmt(pw)}" height="${fmt(math.max(ph, 0.0))}" fill="$color" fill-opacity="0.75"/>"""
-          }
-        }
-      case "point" =>
-        val sizeF = fieldOf(spec, "size")
-        val cs = spec.data.map(r => cf.map(f => tc(num(r(f)))).getOrElse(Double.NaN))
-        val (clo, chi) = extent(cs.filterNot(_.isNaN))
-        spec.data.foreach { r =>
-          val px = tx(num(r(xf))); val py = ty(num(r(yf)))
-          if (!px.isNaN && !py.isNaN) {
-            val rad = sizeF.map(f => 1.5 + 2.5 * math.sqrt(math.max(num(r(f)), 0.0) /
-              math.max(spec.data.map(q => num(q(f))).filterNot(_.isNaN).max, 1.0))).getOrElse(2.5)
-            val fill = cf.map(f => ramp((tc(num(r(f))) - clo) / math.max(chi - clo, 1e-300)))
-              .getOrElse(color)
-            b ++= glyph(marker, sx(px), sy(py), rad, fill)
-          }
-        }
-      case "rect" =>
-        val cvs = spec.data.map(r => tc(num(r(cf.getOrElse(yf)))))
-        val (clo, chi) = extent(cvs.filterNot(_.isNaN))
-        val cxs = spec.data.map(r => tx(num(r(xf)))).filterNot(_.isNaN).distinct.sorted
-        val cys = spec.data.map(r => ty(num(r(yf)))).filterNot(_.isNaN).distinct.sorted
-        def spacing(cs: Seq[Double], fallback: Double) =
-          if (cs.size >= 2) cs.sliding(2).map(p => p(1) - p(0)).min else fallback
-        val bwx = spacing(cxs, math.max(xhi - xlo, 1.0))
-        val bwy = spacing(cys, math.max(yhi - ylo, 1.0))
-        spec.data.foreach { r =>
-          val px = tx(num(r(xf))); val py = ty(num(r(yf))); val cv = tc(num(r(cf.getOrElse(yf))))
-          if (!px.isNaN && !py.isNaN && !cv.isNaN) {
-            val rx = sx(px - bwx / 2); val rw = sx(px + bwx / 2) - rx
-            val ry = sy(py + bwy / 2); val rh = sy(py - bwy / 2) - ry
-            b ++= s"""<rect x="${fmt(rx)}" y="${fmt(ry)}" width="${fmt(rw)}" height="${fmt(rh)}" fill="${ramp((cv - clo) / math.max(chi - clo, 1e-300))}"/>"""
-          }
-        }
-      case "area" =>
-        // one polyline per `variable` series (violin densities),
-        // style-cycled deterministically by series index
-        val varF = fieldOf(spec, "color").orElse(fieldOf(spec, "detail"))
-        val series = varF match {
-          case Some(f) => spec.data.groupBy(r => String.valueOf(r(f))).toSeq.sortBy(_._1)
-          case None => Seq("" -> spec.data)
-        }
-        series.zipWithIndex.foreach { case ((_, rows), i) =>
-          val pts = rows.map(r => (tx(num(r(xf))), ty(num(r(yf)))))
-            .filterNot(p => p._1.isNaN || p._2.isNaN).sortBy(_._1)
-            .map(p => s"${fmt(sx(p._1))},${fmt(sy(p._2))}").mkString(" ")
-          val st = theme.styleFor(i)
-          val dashAttr = if (st.dash.nonEmpty) s""" stroke-dasharray="${st.dash}"""" else ""
-          b ++= s"""<polyline points="$pts" fill="${st.color}" fill-opacity="0.25" stroke="${st.color}"$dashAttr/>"""
-        }
-      case other =>
-        throw new IllegalArgumentException(
-          s"SvgRender: mark '$other' has no SVG backend (bar/point/rect/area/boxplot)")
-    }
-    b.toString
-  }
-
-  /** Boxplot panel (ezdata/plotter.py:943–955 `Plotter.box`): one
-    * whisker+box+median glyph per `variable` row over a categorical x
-    * axis; rows carry the five-number summary computed cluster-side. */
-  private def boxBody(spec: PlotSpec, x0: Int, y0: Int, w: Int, h: Int,
-                      color: String, title: Option[String],
-                      theme: Theme = Theme.classic): String = {
-    val ml = 38; val mr = 8; val mt = 22; val mb = 30
-    val rows = spec.data
-    val k = math.max(rows.size, 1)
-    val los = rows.map(r => num(r("min"))); val his = rows.map(r => num(r("max")))
-    val (ylo, yhi) = extent(los ++ his, 0.02)
-    val sy = Scale(ylo, yhi, y0 + h - mb.toDouble, y0 + mt.toDouble)
-    val sx = Scale(0.0, k.toDouble, x0 + ml.toDouble, x0 + w - mr.toDouble)
-    val b = new StringBuilder
-    val ac = theme.axisColor
-    val tickFill = theme.tickLabelColor.fold("")(c => s""" fill="$c"""")
-    theme.spines match {
-      case "box" =>
-        b ++= s"""<rect x="${x0 + ml}" y="${y0 + mt}" width="${w - ml - mr}" height="${h - mt - mb}" fill="none" stroke="$ac"/>"""
-      case "lb" =>
-        b ++= s"""<line x1="${x0 + ml}" y1="${y0 + mt}" x2="${x0 + ml}" y2="${y0 + h - mb}" stroke="$ac"/>"""
-        b ++= s"""<line x1="${x0 + ml}" y1="${y0 + h - mb}" x2="${x0 + w - mr}" y2="${y0 + h - mb}" stroke="$ac"/>"""
-      case _ => ()
-    }
-    ticks(ylo, yhi).foreach { t =>
-      theme.gridColor.foreach(gc =>
-        b ++= s"""<line x1="${x0 + ml}" y1="${fmt(sy(t))}" x2="${x0 + w - mr}" y2="${fmt(sy(t))}" stroke="$gc"/>""")
-      if (theme.tickLen > 0)
-        b ++= s"""<line x1="${x0 + ml - theme.tickLen}" y1="${fmt(sy(t))}" x2="${x0 + ml}" y2="${fmt(sy(t))}" stroke="$ac"/>"""
-      b ++= s"""<text x="${x0 + ml - 6}" y="${fmt(sy(t) + 3)}" font-size="${theme.tickFontPx}" text-anchor="end"$tickFill>${fmt(t)}</text>"""
-    }
-    title.foreach(t =>
-      b ++= s"""<text x="${x0 + w / 2}" y="${y0 + 14}" font-size="${theme.titleFontPx}" text-anchor="middle">${esc(t)}</text>""")
-    rows.zipWithIndex.foreach { case (r, i) =>
-      val cx = sx(i + 0.5); val half = (sx(0.8) - sx(0.5)) // 0.3 category units
-      val (mn, q1, med, q3, mx) =
-        (num(r("min")), num(r("q1")), num(r("median")), num(r("q3")), num(r("max")))
-      // whisker with caps
-      b ++= s"""<line x1="${fmt(cx)}" y1="${fmt(sy(mn))}" x2="${fmt(cx)}" y2="${fmt(sy(mx))}" stroke="#555"/>"""
-      Seq(mn, mx).foreach(v =>
-        b ++= s"""<line x1="${fmt(cx - half / 2)}" y1="${fmt(sy(v))}" x2="${fmt(cx + half / 2)}" y2="${fmt(sy(v))}" stroke="#555"/>""")
-      // interquartile box + median bar
-      b ++= s"""<rect x="${fmt(cx - half)}" y="${fmt(sy(q3))}" width="${fmt(2 * half)}" height="${fmt(math.max(sy(q1) - sy(q3), 0.0))}" fill="$color" fill-opacity="0.6" stroke="#555"/>"""
-      b ++= s"""<line x1="${fmt(cx - half)}" y1="${fmt(sy(med))}" x2="${fmt(cx + half)}" y2="${fmt(sy(med))}" stroke="#000"/>"""
-      b ++= s"""<text x="${fmt(cx)}" y="${y0 + h - mb + 15}" font-size="${theme.tickFontPx}" text-anchor="middle">${esc(String.valueOf(r("variable")))}</text>"""
-    }
-    b.toString
-  }
-
-  private def glyph(marker: String, x: Double, y: Double, r: Double, fill: String): String =
-    marker match {
-      case "square" =>
-        s"""<rect x="${fmt(x - r)}" y="${fmt(y - r)}" width="${fmt(2 * r)}" height="${fmt(2 * r)}" fill="$fill" fill-opacity="0.8"/>"""
-      case "triangle" =>
-        s"""<polygon points="${fmt(x)},${fmt(y - r)} ${fmt(x - r)},${fmt(y + r)} ${fmt(x + r)},${fmt(y + r)}" fill="$fill" fill-opacity="0.8"/>"""
-      case "diamond" =>
-        s"""<polygon points="${fmt(x)},${fmt(y - r)} ${fmt(x + r)},${fmt(y)} ${fmt(x)},${fmt(y + r)} ${fmt(x - r)},${fmt(y)}" fill="$fill" fill-opacity="0.8"/>"""
-      case _ =>
-        s"""<circle cx="${fmt(x)}" cy="${fmt(y)}" r="${fmt(r)}" fill="$fill" fill-opacity="0.8"/>"""
-    }
+                   theme: Theme = Theme.classic): String =
+    corner(c, panel, theme, canvas(theme)).result
 
   // ── legend (reference matplotlib/legend.py:16–130) ──────────────────
 
@@ -493,7 +147,7 @@ object SvgRender {
     * value ticks from the panel's color extent — integer-decade
     * positions labeled with the VALUE (`ticktext = 10**decades`) when
     * the color channel is log-scaled.  `None` when the spec maps no
-    * color (rect marks fall back to their y field, the body()
+    * color (rect marks fall back to their y field, the [[Panel.body]]
     * convention). */
   def colorbarFor(spec: PlotSpec, panelX: Int, panelY: Int, panelW: Int, panelH: Int,
                   xnorm: Double = 1.05, ynorm: Double = 0.5, barLen: Double = 0.8,
@@ -504,7 +158,6 @@ object SvgRender {
       val clog = isLogChannel(spec, "color")
       def tc(v: Double): Double = if (clog) log10pos(v) else v
       val (lo, hi) = extent(spec.data.map(r => tc(num(r(f)))))
-      val ml = 38; val mr = 8; val mt = 22; val mb = 30 // body() margins
       val dx0 = panelX + ml; val dx1 = panelX + panelW - mr
       val dy0 = panelY + mt; val dy1 = panelY + panelH - mb
       val x = dx0 + (dx1 - dx0) * xnorm
@@ -555,36 +208,31 @@ object SvgRender {
     val nrows = panels.size
     val ncols = panels.head.size
     val cbW = if (colorbars) 48 else 0 // bar + tick labels gutter
-    val b = new StringBuilder
-    b ++= svgOpen(ncols * (panelW + cbW), nrows * panelH, theme)
+    val svg = open(canvas(theme), ncols * (panelW + cbW), nrows * panelH, theme)
     for ((row, i) <- panels.zipWithIndex; (cell, j) <- row.zipWithIndex; spec <- cell) {
       val x0 = j * (panelW + cbW)
       val y0 = i * panelH
-      b ++= body(spec, x0, y0, panelW, panelH, theme.palette(0),
+      body(svg, spec, x0, y0, panelW, panelH, theme.palette(0),
         title = spec.title, theme = theme)
       if (colorbars)
-        colorbarFor(spec, x0, y0, panelW, panelH, theme = theme).foreach(b ++= _)
+        colorbarFor(spec, x0, y0, panelW, panelH, theme = theme).foreach(svg.append)
     }
-    b ++= "</svg>"
-    b.toString
+    svg.result
   }
 
   /** Render a spec with a legend overlaid in the top-right corner. */
   def renderWithLegend(spec: PlotSpec, entries: Seq[(String, LegendSwatch)],
                        width: Int = 480, height: Int = 360,
                        color: String = null, theme: Theme = Theme.classic): String = {
-    val b = new StringBuilder
-    b ++= svgOpen(width, height, theme)
-    b ++= body(spec, 0, 0, width, height,
-      Option(color).getOrElse(theme.palette(0)), title = spec.title, theme = theme)
-    b ++= legend(entries, width - legendWidth(entries) - 12, 26, theme)
-    b ++= "</svg>"
-    b.toString
+    val svg = single(spec, width, height, Option(color).getOrElse(theme.palette(0)), theme,
+      canvas(theme))
+    svg.append(legend(entries, width - legendWidth(entries) - 12, 26, theme))
+    svg.result
   }
 }
 
 /** Deterministic facet style (the plotter.py:394–408 prop cycle entry
-  * for facet index i — see [[SvgRender.styleFor]]). */
+  * for facet index i — see [[Theme.styleFor]]). */
 final case class FacetStyle(color: String, marker: String, dash: String)
 
 /** Legend swatch: a solid patch, or the reference's striped-colormap

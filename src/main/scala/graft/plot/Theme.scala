@@ -1,7 +1,7 @@
 package graft.plot
 
-/** Presentation theme for the SVG rendering tier — the deterministic
-  * core of the reference's per-backend theme modules
+/** Presentation theme for the SVG and PNG rendering tiers — the
+  * deterministic core of the reference's per-backend theme modules
   * (ezdata/plotly/fivethirtyeight_theme.py, ezdata/plotly/
   * light_minimal_theme.py, ezdata/matplotlib/light_minimal_theme.py,
   * ezdata/bokeh/light_minimal_theme.py): color cycle, axis/grid/tick
@@ -37,22 +37,29 @@ final case class Theme(
   require(spines == "box" || spines == "lb" || spines == "none",
     s"spines must be box|lb|none, got $spines")
 
-  /** Deterministic style for facet i under this theme's palette —
-    * marker/dash cycles are shared (plotter.py:394–408). */
+  /** Deterministic style for facet i (the plotter.py:394–408 cycling
+    * rule): color `palette(i % n)` from this theme, marker and dash
+    * from the cycles every theme shares. */
   def styleFor(i: Int): FacetStyle =
     FacetStyle(palette(i % palette.size),
-      SvgRender.markers(i % SvgRender.markers.size),
-      SvgRender.dashes(i % SvgRender.dashes.size))
+      Theme.markers(i % Theme.markers.size), Theme.dashes(i % Theme.dashes.size))
 }
 
 object Theme {
+
+  /** The reference's matplotlib default prop cycle (tab10). */
+  private val tab10: IndexedSeq[String] = Vector(
+    "#1f77b4", "#ff7f0e", "#2ca02c", "#d62728", "#9467bd",
+    "#8c564b", "#e377c2", "#7f7f7f", "#bcbd22", "#17becf")
+  val markers: IndexedSeq[String] = Vector("circle", "square", "triangle", "diamond")
+  val dashes: IndexedSeq[String] = Vector("", "6,3", "2,3")
 
   /** The matplotlib-default look the renderer always had (tab10 cycle,
     * #999 frame, black labels, sans-serif) — byte-identical to the
     * pre-theme output. */
   val classic: Theme = Theme(
     name = "classic",
-    palette = SvgRender.palette,
+    palette = tab10,
     fontFamily = "sans-serif",
     background = None,
     axisColor = "#999",
@@ -91,7 +98,7 @@ object Theme {
     * x-large=⌊12·1.44⌋=17 titles (plotly/light_minimal_theme.py:24–34). */
   val lightMinimal: Theme = Theme(
     name = "light-minimal",
-    palette = SvgRender.palette,
+    palette = tab10,
     fontFamily = "serif",
     background = Some("#ffffff"),
     axisColor = "#666666",

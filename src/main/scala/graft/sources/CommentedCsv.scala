@@ -161,22 +161,28 @@ object CommentedCsv {
     sb.toString
   }
 
-  /** Write a single commented-header CSV file.  The frame is written
-    * distributed to a temp dir, then the (single) part file is streamed
-    * after the header — the format is inherently single-file, so the
-    * final concat is IO-bound, not compute-bound. */
-  def write(ez: EzFrame, path: String, delimiter: String = ","): Unit = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_csv").toString
+  /** Write a single commented-header CSV file. */
+  def write(ez: EzFrame, path: String, delimiter: String = ","): Unit =
+    writeWithHeader(ez.df, path, generateHeader(ez, delimiter), "graft_csv",
+      Map("delimiter" -> delimiter, "nullValue" -> ""))
+
+  /** Single-file CSV assembly: `df` is written distributed (one part,
+    * `options` as CSV writer options) to a `stagingPrefix*` temp dir,
+    * then `header` and the part file are streamed to `path` — the format
+    * is inherently single-file, so the final concat is IO-bound, not
+    * compute-bound.  The staging dir is removed whether or not the write
+    * succeeds. */
+  private[sources] def writeWithHeader(df: DataFrame, path: String, header: String,
+                                       stagingPrefix: String,
+                                       options: Map[String, String]): Unit = {
+    val tmp = java.nio.file.Files.createTempDirectory(stagingPrefix).toString
     try {
-      ez.df.coalesce(1).write.mode("overwrite")
-        .option("delimiter", delimiter)
-        .option("nullValue", "")
-        .csv(tmp)
+      df.coalesce(1).write.mode("overwrite").options(options).csv(tmp)
       val part = new java.io.File(tmp).listFiles().find(_.getName.startsWith("part-"))
         .getOrElse(throw new IllegalStateException(s"no part file written under $tmp"))
       val out = new java.io.BufferedOutputStream(new java.io.FileOutputStream(path))
       try {
-        out.write(generateHeader(ez, delimiter).getBytes("UTF-8"))
+        out.write(header.getBytes("UTF-8"))
         java.nio.file.Files.copy(part.toPath, out)
       } finally out.close()
     } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))

@@ -169,7 +169,7 @@ object Ecsv {
   }
 
   /** Write ECSV: array columns serialized to JSON strings distributed,
-    * then single-file assembly like [[CommentedCsv.write]]. */
+    * then single-file assembly through [[CommentedCsv.writeWithHeader]]. */
   def write(ez: EzFrame, path: String): Unit = {
     val serialized = ez.schema.fields.foldLeft(ez.df) { (df, f) =>
       f.dataType match {
@@ -177,19 +177,7 @@ object Ecsv {
         case _ => df
       }
     }
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ecsv").toString
-    try {
-      serialized.coalesce(1).write.mode("overwrite")
-        .option("header", "true")
-        .option("nullValue", "")
-        .csv(tmp)
-      val part = new java.io.File(tmp).listFiles().find(_.getName.startsWith("part-"))
-        .getOrElse(throw new IllegalStateException(s"no part file written under $tmp"))
-      val out = new java.io.BufferedOutputStream(new java.io.FileOutputStream(path))
-      try {
-        out.write(generateHeader(ez).getBytes("UTF-8"))
-        java.nio.file.Files.copy(part.toPath, out)
-      } finally out.close()
-    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
+    CommentedCsv.writeWithHeader(serialized, path, generateHeader(ez), "graft_ecsv",
+      Map("header" -> "true", "nullValue" -> ""))
   }
 }

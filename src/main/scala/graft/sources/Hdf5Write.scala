@@ -142,7 +142,13 @@ object Hdf5Write {
           i += 1
         }
         flush()
-      } finally { in.close(); file.delete() }
+      } finally in.close()
+    }
+    /** Close and delete the spool file.  Every writer calls this in a
+      * `finally`, so a row loop that throws leaves no file behind. */
+    def close(): Unit = {
+      if (out != null) out.close()
+      if (file != null) file.delete()
     }
   }
 
@@ -457,21 +463,23 @@ object Hdf5Write {
       val spool = new VlenSpool
       // stream rows straight into the buffer
       val bb = java.nio.ByteBuffer.allocate(rowSize).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      val it = df.toLocalIterator()
       var written = 0L
-      while (it.hasNext) {
-        val r = it.next()
-        bb.clear()
-        val rowAddr = o.addr
-        members.zipWithIndex.foreach { case (m, i) => packValue(bb, m.dtype, r.get(i)) }
-        o.put(bb.array())
-        vlenMembers.foreach { case (m, i) =>
-          val v = r.get(i)
-          if (v != null) spool.add(rowAddr + m.offset, v.toString.getBytes("UTF-8"))
+      try {
+        val it = df.toLocalIterator()
+        while (it.hasNext) {
+          val r = it.next()
+          bb.clear()
+          val rowAddr = o.addr
+          members.zipWithIndex.foreach { case (m, i) => packValue(bb, m.dtype, r.get(i)) }
+          o.put(bb.array())
+          vlenMembers.foreach { case (m, i) =>
+            val v = r.get(i)
+            if (v != null) spool.add(rowAddr + m.offset, v.toString.getBytes("UTF-8"))
+          }
+          written += 1
         }
-        written += 1
-      }
-      spool.drainTo(o) // GCOL collections land after the data region
+        spool.drainTo(o) // GCOL collections land after the data region
+      } finally spool.close()
       require(written == nRows, s"row count changed between passes: $nRows -> $written")
       val dsOH = writeDatasetOH(o, Seq(nRows), compound, dataAddr, nRows * rowSize)
       val (btree, heap) = writeSymbolTable(o, Seq("data" -> dsOH), leafK = 4)
@@ -504,22 +512,24 @@ object Hdf5Write {
         val spool = new VlenSpool
         val isVlen = elemDt.isInstanceOf[Hdf5.VlenString]
         val bb = java.nio.ByteBuffer.allocate(rowBytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-        val it = df.select(df(f.name)).toLocalIterator()
         var colRows = 0L
-        while (it.hasNext) {
-          val v = it.next().get(0)
-          bb.clear()
-          val rowAddr = o.addr
-          f.dataType match {
-            case ArrayType(el, _) =>
-              packValue(bb, Hdf5.ArrayOf(elemDt, Seq(rowWidth)), v)
-            case _ => packValue(bb, elemDt, v)
+        try {
+          val it = df.select(df(f.name)).toLocalIterator()
+          while (it.hasNext) {
+            val v = it.next().get(0)
+            bb.clear()
+            val rowAddr = o.addr
+            f.dataType match {
+              case ArrayType(el, _) =>
+                packValue(bb, Hdf5.ArrayOf(elemDt, Seq(rowWidth)), v)
+              case _ => packValue(bb, elemDt, v)
+            }
+            o.put(bb.array())
+            if (isVlen && v != null) spool.add(rowAddr, v.toString.getBytes("UTF-8"))
+            colRows += 1
           }
-          o.put(bb.array())
-          if (isVlen && v != null) spool.add(rowAddr, v.toString.getBytes("UTF-8"))
-          colRows += 1
-        }
-        spool.drainTo(o)
+          spool.drainTo(o)
+        } finally spool.close()
         // each column is a separate job over a separate scan: a retry or
         // nondeterministic plan yielding a different count would declare
         // dims=nRows over misaligned bytes — a silently corrupt file

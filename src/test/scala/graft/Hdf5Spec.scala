@@ -14,6 +14,11 @@ import graft.sources.{Hdf5, Hdf5Write}
   *      directly from the spec, exercising the chunk B-tree walk and
   *      the deflate/shuffle filter chain the writer never emits.
   */
+object Hdf5Spec {
+  /** UDF calls seen in partition 1 (local mode: one JVM, one counter). */
+  val partOneCalls = new java.util.concurrent.atomic.AtomicInteger
+}
+
 class Hdf5Spec extends SparkSpec {
   import spark.implicits._
 
@@ -214,6 +219,31 @@ class Hdf5Spec extends SparkSpec {
     // regardless of string length (the 70k string lives in the heap)
     assert(new java.io.File(path).length() <
       new java.io.File({ val p = tmp(); Hdf5Write.write(EzFrame(df), p); p }).length() * 2)
+  }
+
+  test("a vlen write that fails in its data pass leaves no spool file (both layouts)") {
+    // `name` throws in partition 1 on its second evaluation there: the
+    // header pass evaluates it once per row, so the failure lands in the
+    // data pass, after partition 0's strings went to the spool
+    val perPart = 4
+    val name = udf { (id: Long) =>
+      if (org.apache.spark.TaskContext.getPartitionId() == 1 &&
+          Hdf5Spec.partOneCalls.incrementAndGet() > perPart)
+        throw new IllegalStateException("injected data-pass failure")
+      s"name$id"
+    }
+    val writers = Seq[(String, (EzFrame, String) => Unit)](
+      "table" -> ((ez, p) => Hdf5Write.write(ez, p, vlenStrings = true)),
+      "columns" -> ((ez, p) => Hdf5Write.writeColumns(ez, p, vlenStrings = true)))
+    for ((layout, write) <- writers) {
+      Hdf5Spec.partOneCalls.set(0)
+      val df = spark.range(0, 2 * perPart, 1, 2).select(col("id"), name(col("id")).as("name"))
+      val leaked = IoSpec.newStagingDirs("graft_vlen") {
+        val e = intercept[org.apache.spark.SparkException](write(EzFrame(df), tmp()))
+        assert(e.getMessage.contains("injected data-pass failure"), e.getMessage)
+      }
+      assert(leaked.isEmpty, s"$layout layout left spool files behind: $leaked")
+    }
   }
 
   test("chunked + shuffle + deflate WRITE round-trips and actually compresses") {

@@ -245,14 +245,14 @@ class PlotterSpec extends SparkSpec {
 
   test("facet overlay cycles styles deterministically and renders a legend") {
     val f = p.groupby("g").hist("x", bins = 5)
-    assert(f.styles.map(_._2) == Seq(
-      graft.plot.SvgRender.styleFor(0), graft.plot.SvgRender.styleFor(1)))
-    assert(f.styles.map(_._2.color) == Seq("#1f77b4", "#ff7f0e"))
+    assert(f.styles().map(_._2) == Seq(
+      graft.plot.Theme.classic.styleFor(0), graft.plot.Theme.classic.styleFor(1)))
+    assert(f.styles().map(_._2.color) == Seq("#1f77b4", "#ff7f0e"))
     val svg = f.toSvg()
     assert(svg.contains("g=a") && svg.contains("g=b"), "legend labels expected")
     assert(svg.contains("#1f77b4") && svg.contains("#ff7f0e"), "cycled colors expected")
     // the 11th facet wraps the palette; marker and dash cycle at 4/3
-    val s10 = graft.plot.SvgRender.styleFor(10)
+    val s10 = graft.plot.Theme.classic.styleFor(10)
     assert(s10.color == "#1f77b4" && s10.marker == "triangle" && s10.dash == "6,3")
   }
 
@@ -374,15 +374,15 @@ class PlotterSpec extends SparkSpec {
 
   test("logTicks: decade majors, 2-9 minors, short-range mantissa labels") {
     // 3 decades: majors at 1, 10, 100 (labeled); minors at 2..9 x decade
-    val t3 = graft.plot.SvgRender.logTicks(0.0, 2.0)
+    val t3 = graft.plot.Panel.logTicks(0.0, 2.0)
     assert(t3.filterNot(_._3).map(_._2) == Seq("1", "10", "100"))
     assert(t3.count(_._3) == 16, "2..9 minors for two full decades")
     // under one decade: 2/5 mantissa ticks get labels so the axis reads
-    val short = graft.plot.SvgRender.logTicks(0.05, 0.95)
+    val short = graft.plot.Panel.logTicks(0.05, 0.95)
     assert(short.exists(_._2 == "2") && short.exists(_._2 == "5"))
     // non-positive values have no log position
-    assert(graft.plot.SvgRender.log10pos(0.0).isNaN &&
-      graft.plot.SvgRender.log10pos(-3.0).isNaN)
+    assert(graft.plot.Panel.log10pos(0.0).isNaN &&
+      graft.plot.Panel.log10pos(-3.0).isNaN)
   }
 
   test("log-axis scatter renders decade ticks in both backends, golden-pinned") {

@@ -49,7 +49,7 @@ class PngRenderEdgeSpec extends AnyFunSuite {
     val below = PlotSpec("bar", Seq(Map[String, Any]("x" -> 1.5, "y" -> -100.0)), enc)
     val blank = rasterOf(120, 100) { r => () }
     val drawn = rasterOf(120, 100) { r =>
-      PngRender.body(r, below, 0, 0, 120, 100, 0x1f77b4,
+      Panel.body(r, below, 0, 0, 120, 100, "#1f77b4",
         axesFrom = Some(axes), drawAxes = false, title = None)
     }
     assert(java.util.Arrays.equals(blank, drawn),
@@ -61,7 +61,7 @@ class PngRenderEdgeSpec extends AnyFunSuite {
     val spec = PlotSpec("bar",
       Seq(Map[String, Any]("x" -> 1.0, "y" -> 4.0), Map[String, Any]("x" -> 2.0, "y" -> 10.0)), enc)
     val drawn = rasterOf(120, 100) { r =>
-      PngRender.body(r, spec, 0, 0, 120, 100, 0x1f77b4, drawAxes = false, title = None)
+      Panel.body(r, spec, 0, 0, 120, 100, "#1f77b4", drawAxes = false, title = None)
     }
     assert(drawn.exists(_ != -1), "in-range bars must still rasterize")
   }

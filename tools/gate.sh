@@ -17,9 +17,9 @@ OUT=${OUT:-$WORK/verify_out}
 LOG=$WORK/gate_sbt.log
 trap 'echo "GATE: dumps in $OUT, sbt log $LOG"' EXIT
 ONLY="$1"
-if [ -n "$ONLY" ]; then export SPARK_GRAFT_ONLY="$ONLY"; fi
 rm -rf "$OUT"
-if ! sbt -batch "runMain graft.Verify $SF $OUT" > "$LOG" 2>&1; then
+# the comma list rides as trailing name-part args (Verify's slot filter)
+if ! sbt -batch "runMain graft.Verify $SF $OUT ${ONLY//,/ }" > "$LOG" 2>&1; then
   echo "GATE: Verify run failed —"
   tail -30 "$LOG"
   exit 1

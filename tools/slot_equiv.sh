@@ -37,7 +37,7 @@ run() {  # run <log name> <sbt command>
   fi
 }
 # a slot name that matches nothing: Verify runs no slot, writes the JSON
-SPARK_GRAFT_ONLY=__no_slot__ run verify "runMain graft.Verify $SF $OUT"
+run verify "runMain graft.Verify $SF $OUT __no_slot__"
 SPARK_GRAFT_SF_DIR=$SF run plandump "runMain graft.tools.PlanDump $OUT/plans plan"
 grep "PLAN-ERR" "$OUT/logs/plandump.log" || true
 
